@@ -38,10 +38,6 @@ def bit_lengths32(x: np.ndarray) -> np.ndarray:
     return w
 
 
-def bit_width_of_max(maxval: int) -> int:
-    return int(maxval).bit_length()
-
-
 def pack(vals: np.ndarray, width: int) -> bytes:
     """Pack vals (non-negative, < 2**width) into width bits each.
 

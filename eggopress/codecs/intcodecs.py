@@ -40,10 +40,6 @@ def dec_plain(header: dict, payload: bytes) -> np.ndarray:
     return np.frombuffer(payload, dtype=dt, count=header["n"]).astype(np.int64)
 
 
-def plain_size(n: int) -> int:
-    return 4 * n + 40  # payload + approx header
-
-
 def plain_blob_size(arr: np.ndarray) -> int:
     """EXACT len(enc_plain(arr)) without materializing the payload: the
     plain-fallback guards in encode_ints/_enc_sub only need the size, and

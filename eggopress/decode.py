@@ -234,15 +234,13 @@ def _docmap_fn(batches):
     import numpy as _np
     import pyarrow as _pa
 
-    from eggopress.chunk import _string_from_parts
-    from eggopress.codecs import core as _codecs
-
     for batch in batches:
         ids, cids = [], []
         for i in range(batch.num_rows):
-            lengths, buf = _codecs.decode_strs(
-                batch.column("doc_id_blob")[i].as_py())
-            arr = _string_from_parts(lengths, buf)
+            arr = chunklib.decode_chunk_projected(
+                ("doc_id",),
+                {"doc_id_blob": batch.column("doc_id_blob")[i].as_py()},
+            ).column(0)
             ids.append(arr)
             cids.append(_np.full(len(arr),
                                  batch.column("chunk_id")[i].as_py(),

@@ -8,22 +8,12 @@ face of the same codec stack (reference analog: eggo's flatten/convert
 passes accept arbitrary ADAM schemas, eggo/datasets/*/datapackage.json —
 the dataset registry is schema-per-dataset, not one fixed shape).
 
-Supported column types and their stream mappings (no per-row Python —
-every column is an Arrow-buffer-level transform):
-
-  int8/16/32/64          -> int64 stream (codec auto-selection: dict /
-                            rle / forbp / pfor / bitpack / plain)
-  float64 / float32      -> IEEE bit pattern viewed as int64/int32 —
-                            bit-identical by construction (NaN payloads
-                            included); discrete-valued doubles (prices,
-                            rates) dict-encode well
-  timestamp (any unit)   -> underlying int64 epoch ticks (FOR shines)
-  date32                 -> int32 days -> int64 stream
-  string                 -> (lengths, utf8 buffer) via str codecs
-                            (dict / fsst / plain)
-  array<int8/16/32/64>   -> lengths stream + values stream, framed into
-                            one blob (the corpus tokens decomposition,
-                            generalized)
+Each column chunk goes through the same column-chunk layer as the
+corpus (chunk.py: _encode_column / _decode_column — ints, floats as IEEE
+bit patterns, timestamps, dates, strings and int/float arrays, no
+per-row Python). A list column's (lengths, values) blob pair is framed
+into one `<c>__blob` here (_frame2); the corpus instead stores the pair
+as its n_tok_blob and tokens_blob.
 
 Nulls are rejected loudly (ValueError) — the codec stack is dense-only,
 same contract as the corpus path.
@@ -47,61 +37,21 @@ from __future__ import annotations
 import json
 import os
 
-import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from eggopress.chunk import _string_from_parts, _string_parts
+from eggopress.chunk import (
+    _ELEMENT_KIND,
+    _KINDS,
+    _colkind,
+    _decode_column,
+    _encode_column,
+    _from_int64,
+    _int_stats,
+)
 from eggopress.codecs import core as codecs
-
-_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-# kind -> (has int64 min/max stats, raw bytes per value)
-_KINDS = {
-    "int8": (True, 1), "int16": (True, 2), "int32": (True, 4),
-    "int64": (True, 8),
-    "f32": (False, 4), "f64": (False, 8),
-    "ts": (True, 8), "date": (True, 4),
-    "str": (False, None), "list_int": (False, None),
-    "list_f32": (False, None), "list_f64": (False, None),
-}
-
-
-def _colkind(dt: T.DataType) -> str:
-    if isinstance(dt, T.ByteType):
-        return "int8"
-    if isinstance(dt, T.ShortType):
-        return "int16"
-    if isinstance(dt, T.IntegerType):
-        return "int32"
-    if isinstance(dt, T.LongType):
-        return "int64"
-    if isinstance(dt, T.FloatType):
-        return "f32"
-    if isinstance(dt, T.DoubleType):
-        return "f64"
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return "ts"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.StringType):
-        return "str"
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, _INT_TYPES):
-        # containsNull may be declared; density is enforced per chunk
-        return "list_int"
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.FloatType):
-        return "list_f32"
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.DoubleType):
-        return "list_f64"
-    raise ValueError(f"unsupported column type for generic encode: {dt}")
-
-
-def _check_dense(name: str, arr: pa.Array) -> None:
-    if arr.null_count:
-        raise ValueError(
-            f"generic encode is dense-only: column {name!r} has "
-            f"{arr.null_count} nulls")
 
 
 def _frame2(a: bytes, b: bytes) -> bytes:
@@ -112,115 +62,6 @@ def _frame2(a: bytes, b: bytes) -> bytes:
 def _unframe2(blob: bytes) -> tuple[bytes, bytes]:
     n = int.from_bytes(blob[:4], "little")
     return blob[4 : 4 + n], blob[4 + n :]
-
-
-def _encode_column(name: str, kind: str,
-                   arr: pa.Array) -> tuple[bytes, int, str]:
-    """-> (blob, raw_bytes, codec). Dispatch is per COLUMN CHUNK, never
-    per row. For list_int the reported codec is the VALUES stream's (the
-    framed blob is not a bare codec blob, so codec_of can't read it)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    _check_dense(name, arr)
-    n = len(arr)
-    if kind in ("int8", "int16", "int32", "int64"):
-        ints = arr.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        blob = codecs.encode_ints(ints)
-        return blob, _KINDS[kind][1] * n, codecs.codec_of(blob)
-    if kind == "f64":
-        bits = arr.to_numpy(zero_copy_only=False).view(np.int64)
-        blob = codecs.encode_ints(bits)
-        return blob, 8 * n, codecs.codec_of(blob)
-    if kind == "f32":
-        bits = arr.to_numpy(zero_copy_only=False).view(np.int32)
-        blob = codecs.encode_ints(bits.astype(np.int64))
-        return blob, 4 * n, codecs.codec_of(blob)
-    if kind == "ts":
-        ints = arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        blob = codecs.encode_ints(ints.astype(np.int64, copy=False))
-        return blob, 8 * n, codecs.codec_of(blob)
-    if kind == "date":
-        ints = arr.cast(pa.int32()).to_numpy(zero_copy_only=False)
-        blob = codecs.encode_ints(ints.astype(np.int64))
-        return blob, 4 * n, codecs.codec_of(blob)
-    if kind == "str":
-        lengths, buf = _string_parts(arr)
-        blob = codecs.encode_strs(lengths, buf)
-        return blob, len(buf) + 4 * n, codecs.codec_of(blob)
-    if kind in ("list_int", "list_f32", "list_f64"):
-        values = arr.flatten()
-        _check_dense(name, values)
-        raw_vals = values.to_numpy(zero_copy_only=False)
-        if kind == "list_f32":
-            flat = raw_vals.astype(np.float32, copy=False).view(
-                np.int32).astype(np.int64)
-            vw = 4
-        elif kind == "list_f64":
-            flat = raw_vals.astype(np.float64, copy=False).view(np.int64)
-            vw = 8
-        else:
-            flat = raw_vals.astype(np.int64, copy=False)
-            vw = 8
-        offs = np.asarray(arr.offsets)
-        lengths = np.diff(offs).astype(np.int64)
-        val_blob = codecs.encode_ints(flat)
-        blob = _frame2(codecs.encode_ints(lengths), val_blob)
-        return blob, vw * len(flat) + 4 * n, codecs.codec_of(val_blob)
-    raise AssertionError(kind)
-
-
-def _int_stats(kind: str, arr: pa.Array) -> tuple[int, int, int]:
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if kind == "ts":
-        ints = arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-    elif kind == "date":
-        ints = arr.cast(pa.int32()).to_numpy(zero_copy_only=False)
-    else:
-        ints = arr.to_numpy(zero_copy_only=False)
-    if not len(ints):
-        return 0, 0, 0
-    return int(ints.min()), int(ints.max()), int(ints.sum(dtype=np.int64))
-
-
-def _from_int64(kind: str, ints: np.ndarray, field: pa.Field) -> pa.Array:
-    """int64 stream -> typed column array (int-backed kinds only)."""
-    if kind == "date":
-        return pa.array(ints.astype(np.int32), type=pa.int32()).cast(
-            field.type)
-    return pa.array(ints, type=pa.int64()).cast(field.type)
-
-
-def _decode_column(kind: str, blob: bytes, field: pa.Field) -> pa.Array:
-    if kind in ("int8", "int16", "int32", "int64", "ts", "date"):
-        return _from_int64(kind, codecs.decode_ints(blob), field)
-    if kind == "f64":
-        return pa.array(codecs.decode_ints(blob).view(np.float64),
-                        type=pa.float64())
-    if kind == "f32":
-        bits = codecs.decode_ints(blob).astype(np.int32)
-        return pa.array(bits.view(np.float32), type=pa.float32())
-    if kind == "str":
-        return _string_from_parts(*codecs.decode_strs(blob))
-    if kind in ("list_int", "list_f32", "list_f64"):
-        len_blob, val_blob = _unframe2(blob)
-        lengths = codecs.decode_ints(len_blob)
-        ints = codecs.decode_ints(val_blob)
-        if kind == "list_f32":
-            values = pa.array(ints.astype(np.int32).view(np.float32),
-                              type=pa.float32())
-        elif kind == "list_f64":
-            values = pa.array(ints.view(np.float64), type=pa.float64())
-        else:
-            values = pa.array(ints, type=pa.int64()).cast(
-                field.type.value_type)
-        offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-            values,
-        ).cast(field.type)
-    raise AssertionError(kind)
 
 
 def _chunk_schema(names: list[str], kinds: dict[str, str]) -> pa.Schema:
@@ -374,6 +215,8 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
                 for c in names:
                     arr = sl.column(c)
                     blob, r, codec = _encode_column(c, kinds[c], arr)
+                    if kinds[c] in _ELEMENT_KIND:
+                        blob = _frame2(*blob)
                     cols[f"{c}__blob"] = blob
                     cols[f"{c}__codec"] = codec
                     raw += r
@@ -391,19 +234,7 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
                     schema=out_schema,
                 )
 
-    # Spark-side chunk schema (binary/string/long only)
-    fields = []
-    for f in out_schema:
-        if f.type == pa.binary():
-            st = T.BinaryType()
-        elif f.type == pa.string():
-            st = T.StringType()
-        else:
-            st = T.LongType()
-        fields.append(T.StructField(f.name, st))
-    spark_chunk_schema = T.StructType(fields)
-
-    encoded = df.mapInArrow(encode_fn, spark_chunk_schema)
+    encoded = df.mapInArrow(encode_fn, from_arrow_schema(out_schema))
     data_dir = os.path.join(path, "data")
     encoded.write.mode("overwrite").option(
         "compression", conf.data_codec()).parquet(data_dir)
@@ -478,24 +309,16 @@ def decode_generic(spark: SparkSession, path: str,
             chunks = chunks.filter(F.col(f"{c}__min") <= int(hi))
     chunks = chunks.select(*proj)
 
-    out_fields = [full_schema[c] for c in need]
-    arrow_fields = {
-        f.name: pa.schema(
-            [pa.field(f.name, _spark_to_arrow(f.dataType))]
-        ).field(0)
-        for f in out_fields
-    }
     # exact row filters run on the raw int64 stream emitted as a helper
     # column by the decode UDF — the SAME domain as the chunk stats, with
     # zero timestamp/timezone semantics in the loop (unix_micros etc.
     # don't even accept TIMESTAMP_NTZ)
     helper = {c: f"_{c}__i64" for c in where}
     out_spark = T.StructType(
-        list(out_fields)
+        [full_schema[c] for c in need]
         + [T.StructField(h, T.LongType()) for h in helper.values()])
-    out_arrow = pa.schema(
-        [arrow_fields[c] for c in need]
-        + [pa.field(helper[c], pa.int64()) for c in where])
+    out_arrow = to_arrow_schema(out_spark)
+    arrow_fields = {c: out_arrow.field(c) for c in need}
 
     def decode_fn(batches):
         for batch in batches:
@@ -507,9 +330,11 @@ def decode_generic(spark: SparkSession, path: str,
                     if c in where:
                         ints = codecs.decode_ints(blob)
                         arrays.append(
-                            _from_int64(kinds[c], ints, arrow_fields[c]))
+                            _from_int64(ints, arrow_fields[c]))
                         extras[c] = pa.array(ints, type=pa.int64())
                     else:
+                        if kinds[c] in _ELEMENT_KIND:
+                            blob = _unframe2(blob)
                         arrays.append(_decode_column(
                             kinds[c], blob, arrow_fields[c]))
                 yield pa.RecordBatch.from_arrays(
@@ -522,32 +347,6 @@ def decode_generic(spark: SparkSession, path: str,
         if hi is not None:
             out = out.filter(F.col(helper[c]) <= int(hi))
     return out.select(*want)
-
-
-def _spark_to_arrow(dt: T.DataType) -> pa.DataType:
-    if isinstance(dt, T.ByteType):
-        return pa.int8()
-    if isinstance(dt, T.ShortType):
-        return pa.int16()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.FloatType):
-        return pa.float32()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.TimestampNTZType):
-        return pa.timestamp("us")
-    if isinstance(dt, T.TimestampType):
-        return pa.timestamp("us", tz="UTC")
-    if isinstance(dt, T.DateType):
-        return pa.date32()
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.ArrayType):
-        return pa.list_(_spark_to_arrow(dt.elementType))
-    raise ValueError(f"unsupported: {dt}")
 
 
 def stats_rollup_generic(spark: SparkSession, path: str,

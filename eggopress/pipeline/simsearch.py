@@ -93,16 +93,6 @@ def brute_topk(df: DataFrame, query_vec, k: int = 10) -> DataFrame:
     )
 
 
-def brute_topk_oracle(query_vec, k: int = 10) -> str:
-    q = _vec_lit_duck(query_vec)
-    return f"""
-SELECT vec_id, {_cos_duck(EMB_D_DUCK, q)} AS cos
-FROM embeddings
-ORDER BY cos DESC, vec_id ASC
-LIMIT {k}
-"""
-
-
 def lsh_bucket_expr_spark(dim: int) -> str:
     planes = _planes(dim)
     terms = []
@@ -152,23 +142,6 @@ def lsh_topk(df: DataFrame, query_vec, k: int = 10, dim: int | None = None,
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(k)
     )
-
-
-def lsh_topk_oracle(query_vec, k: int = 10, dim: int | None = None,
-                    probe_bits: int = 0) -> str:
-    dim = dim or len(query_vec)
-    q = _vec_lit_duck(query_vec)
-    qbucket = lsh_bucket_expr_duck(dim).replace(EMB_D_DUCK, q)
-    # hamming-ball membership == the driver-enumerated bucket list
-    where = (f"bucket = ({qbucket})" if probe_bits == 0 else
-             f"bit_count(xor(bucket, ({qbucket}))) <= {probe_bits}")
-    return f"""
-SELECT vec_id, {_cos_duck(EMB_D_DUCK, q)} AS cos
-FROM (SELECT vec_id, embedding, {lsh_bucket_expr_duck(dim)} AS bucket FROM embeddings)
-WHERE {where}
-ORDER BY cos DESC, vec_id ASC
-LIMIT {k}
-"""
 
 
 # ------------------------------------------------------------- IVF ANN

@@ -7,8 +7,8 @@ the table-format snapshot (tablefmt.py).
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # The authoritative input shape: pre-tokenized training sequences.
 CORPUS_SCHEMA = T.StructType(
@@ -19,15 +19,7 @@ CORPUS_SCHEMA = T.StructType(
         T.StructField("source", T.StringType(), False),
     ]
 )
-
-CORPUS_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string(), nullable=False),
-        pa.field("tokens", pa.list_(pa.field("item", pa.int32(), nullable=False)), nullable=False),
-        pa.field("n_tok", pa.int32(), nullable=False),
-        pa.field("source", pa.string(), nullable=False),
-    ]
-)
+CORPUS_ARROW_SCHEMA = to_arrow_schema(CORPUS_SCHEMA)
 
 # Encoded chunk rows: one row per (partition, chunk); one blob per logical
 # column. Self-describing blobs (codec + params in the blob header); codec
@@ -62,35 +54,7 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("tokens_codec", T.StringType(), False),
     ]
 )
-
-CHUNK_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("source", pa.string()),
-        pa.field("salt", pa.int32()),
-        pa.field("partition_id", pa.string()),
-        pa.field("chunk_id", pa.int64()),
-        pa.field("n_rows", pa.int32()),
-        pa.field("n_values", pa.int64()),
-        pa.field("raw_bytes", pa.int64()),
-        pa.field("encoded_bytes", pa.int64()),
-        pa.field("n_tok_min", pa.int32()),
-        pa.field("n_tok_max", pa.int32()),
-        pa.field("tok_min", pa.int32()),
-        pa.field("tok_max", pa.int32()),
-        pa.field("doc_id_blob", pa.binary()),
-        pa.field("source_blob", pa.binary()),
-        pa.field("n_tok_blob", pa.binary()),
-        pa.field("tokens_blob", pa.binary()),
-        pa.field("doc_id_bytes", pa.int64()),
-        pa.field("source_bytes", pa.int64()),
-        pa.field("n_tok_bytes", pa.int64()),
-        pa.field("tokens_bytes", pa.int64()),
-        pa.field("doc_id_codec", pa.string()),
-        pa.field("source_codec", pa.string()),
-        pa.field("n_tok_codec", pa.string()),
-        pa.field("tokens_codec", pa.string()),
-    ]
-)
+CHUNK_ARROW_SCHEMA = to_arrow_schema(CHUNK_SCHEMA)
 
 # Manifest: per column-chunk stats (FIXTURES.md §3).
 MANIFEST_SCHEMA = T.StructType(

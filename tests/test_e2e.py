@@ -180,3 +180,21 @@ def test_commit_conflict_and_crash_recovery(tmp_path):
     assert t1.current_version() == 4
     assert t1.snapshot()["crashed"] is True
     assert t1.commit_snapshot({"stage": "encoded"}) == 5
+
+
+def test_encode_table_rejects_n_tok_mismatch(spark, tmp_path):
+    """A row whose n_tok disagrees with its token list fails the encode,
+    naming its partition and chunk, and no chunk file is promoted."""
+    df = synth.corpus_df(spark, 300)
+    victim = df.orderBy("doc_id").first()["doc_id"]
+    bad = df.withColumn(
+        "n_tok",
+        F.when(F.col("doc_id") == victim, F.col("n_tok") + 1)
+        .otherwise(F.col("n_tok")).cast("int"))
+    path = str(tmp_path / "bad_ntok")
+    with pytest.raises(Exception, match=r"n_tok != len\(tokens\) in "
+                                        r"partition 'source=\w+/salt=\d+' chunk \d+"):
+        encode.encode_table(spark, bad, path, n_partitions=2)
+    tbl = Table(path)
+    assert tbl.partition_dirs() == []
+    assert (tbl.snapshot() or {}).get("stage") != "encoded"
