@@ -281,60 +281,6 @@ def build_doc_index(spark: SparkSession, table_path: str) -> dict:
     return meta
 
 
-def update_doc_index(spark: SparkSession, table_path: str) -> dict:
-    """INCREMENTAL docmap maintenance: index only the chunk files added
-    since the version the index was built at (snapshot listing diff —
-    the decode_changes mechanism), append their (doc_id, chunk_id) rows
-    into the existing pfx= layout, and bump the recorded version. Work
-    is O(new data), so a streaming table keeps its random-access index
-    current at per-batch cost instead of rebuilding O(table) after
-    every append. Falls back to a full build when no index exists; a
-    compaction between versions rewrites file names, which the listing
-    diff would misread as all-new — that case rebuilds too (loudly in
-    the returned mode)."""
-    import json as _json
-    import os as _os
-
-    tbl = Table(table_path)
-    meta_path = _os.path.join(tbl.path, "index", "docmap", "_meta.json")
-    if not _os.path.exists(meta_path):
-        out = build_doc_index(spark, table_path)
-        return {**out, "mode": "full_build"}
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    cur = tbl.current_version()
-    built = meta["built_at_version"]
-    if built == cur:
-        return {**meta, "mode": "current"}
-    built_snap_files = set(tbl.listing_at_version(built))
-    cur_files = tbl.files_at_version(cur)
-    if not built_snap_files <= set(cur_files):
-        # files the index covered are gone — compacted away OR rolled
-        # back: the incremental diff can no longer attribute rows, and
-        # keeping the old rows would leave phantom doc_ids in the index
-        # (benign for lookups thanks to the exact filters, but a lie
-        # about coverage) -> full rebuild
-        out = build_doc_index(spark, table_path)
-        return {**out, "mode": "rebuild_after_rewrite"}
-    new = [p for p in cur_files if p not in built_snap_files]
-    if new:
-        enc = spark.read.option("basePath", tbl.data_dir).parquet(*new) \
-            .select("chunk_id", "doc_id_blob")
-        dm = enc.mapInArrow(_docmap_fn, "doc_id string, chunk_id long")
-        data_dir = _os.path.join(tbl.path, "index", "docmap", "data")
-        (
-            dm.withColumn("pfx", F.pmod(F.xxhash64("doc_id"),
-                                        F.lit(meta["pfx_mod"])))
-            .write.partitionBy("pfx").mode("append").parquet(data_dir)
-        )
-    meta = {**meta, "built_at_version": cur}
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(meta, fh)
-    _os.replace(tmp, meta_path)
-    return {**meta, "mode": "incremental", "new_files": len(new)}
-
-
 def lookup_docs(spark: SparkSession, table_path: str, ids: list[str],
                 columns: list[str] | None = None) -> DataFrame:
     """Random access by doc_id: resolve ids -> chunk ids through the

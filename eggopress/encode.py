@@ -1,29 +1,47 @@
-"""The encode pipeline: plan -> salt -> repartitionByRange -> mapInArrow
--> partitioned blob write -> atomic promote -> lineage checkpoint.
+"""The corpus write path. Every writer of a corpus table runs the same
+steps: plan -> stage -> manifest -> promote -> lineage -> commit.
+
+- plan (`_plan`): one groupBy gives per-source row and token counts; the
+  partition count follows from them and `plan_salts` splits it across
+  sources by row share (the skew policy).
+- stage (`_stage`): salt, repartitionByRange on (source, salt), sort,
+  encode chunks under mapInArrow and write the source=/salt= staging dir
+  (`_write_staged`, reused by compaction), recording every failed
+  attempt as a 'failed' lineage row.
+- then the manifest rows, the atomic promote into data/, one lineage row
+  per planned partition (`_lineage_rows`) and the 'encoded' snapshot.
+
+`encode_table` (batch: resumable, retried, optionally in waves) and
+`encode_append` (one streaming micro-batch, replayed whole or not at
+all) differ only where an append means something else: its manifest is
+one deterministic append-<run_id>.parquet that a replay overwrites; its
+promote merges files into the partition dirs instead of replacing them;
+its chunk ids are namespaced per run; and it writes doc_id / signature
+sidecars before its lineage rows.
 
 Engine analog of eggo's toast pipeline (datasets/dbsnp/toast.sh; SURVEY.md
-§3.2): what eggo runs as five OS processes (ingest, vcf2adam, flatten,
-Hive DISTRIBUTE BY locus-partition insert, distcp publish) is one Spark
-DAG here. The DISTRIBUTE BY derived-key shuffle (toast.sh:53) becomes
-repartitionByRange on (source, salt); the spec's sample-hash
-sub-partitioning for skew (docs/spec.md:99-101) becomes explicit salting
-sized from a groupBy pre-pass; the per-stage Parquet materialization
-becomes the lineage checkpoint table (resume without re-encoding).
+§3.2): the DISTRIBUTE BY derived-key shuffle (toast.sh:53) becomes
+repartitionByRange on (source, salt), the spec's sample-hash skew
+sub-partitioning (docs/spec.md:99-101) becomes explicit salting, and the
+per-stage Parquet materialization becomes the lineage checkpoint table.
 """
 
 from __future__ import annotations
 
 import math
+import re
 import time
 import uuid
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from eggopress import chunk as chunklib
 from eggopress import conf, lineage as lineagelib
-from eggopress.schema import CHUNK_SCHEMA, CORPUS_ARROW_SCHEMA
+from eggopress.schema import (CHUNK_SCHEMA, CORPUS_ARROW_SCHEMA, CORPUS_FORMAT,
+                              MANIFEST_SCHEMA)
 from eggopress.tablefmt import Table
 
 
@@ -94,9 +112,9 @@ def _salt_expr(salts: dict[str, int]):
 
 
 def _encode_fn(fail_partitions: frozenset[str],
-               fail_until_attempt: dict[str, int] | None = None,
-               attempts: dict[str, int] | None = None,
-               chunk_base: int = 0, task_shift: int = 32):
+               fail_until_attempt: dict[str, int],
+               attempts: dict[str, int],
+               chunk_base: int, task_shift: int):
     """mapInArrow worker: split each sorted batch at (source,salt) group
     boundaries, encode each slice as one chunk.
 
@@ -110,8 +128,6 @@ def _encode_fn(fail_partitions: frozenset[str],
     overflow guards: a silent wrap would alias another task's ids and
     corrupt the (partition_id, chunk_id, column) manifest key.
     """
-    fail_until_attempt = fail_until_attempt or {}
-    attempts = attempts or {}
 
     def fn(batches):
         from pyspark import TaskContext
@@ -185,14 +201,145 @@ def _chunk_stats(staged: DataFrame) -> list:
             F.count("*").alias("chunks"),
             F.sum("n_rows").alias("rows"),
             F.sum("n_values").alias("values"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("encoded_bytes").alias("enc"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("encoded_bytes").alias("encoded_bytes"),
             F.concat_ws(
                 ",", F.array_distinct(F.collect_list("tokens_codec"))
             ).alias("codecs"),
         )
         .collect()
     )
+
+
+def _totals(stats: list) -> dict:
+    """Summary/snapshot totals of a list of _chunk_stats rows."""
+    return {k: sum(int(r[k]) for r in stats)
+            for k in ("chunks", "rows", "values", "raw_bytes", "encoded_bytes")}
+
+
+def _phase_clock():
+    """(phases, mark): mark(name) adds the time since the previous mark
+    to phases[name] — the phase_sec breakdown of one write."""
+    phases: dict[str, float] = {}
+    last = [time.time()]
+
+    def mark(name: str) -> None:
+        now = time.time()
+        phases[name] = round(phases.get(name, 0.0) + (now - last[0]), 3)
+        last[0] = now
+
+    return phases, mark
+
+
+def _plan(df: DataFrame, n_partitions: int | None) -> tuple[dict, dict]:
+    """(salts, per-source row counts) for one write, from one groupBy.
+
+    Default sizing (n_partitions=None): scale with cores, but never shred
+    a small input into sub-chunk partitions (per-chunk overhead would eat
+    the ratio). Corpus rows are HEAVY (hundreds of tokens), so the floor
+    is value-based as well as row-based: a row-only floor sized the
+    bench's 60k-doc / 35M-token corpus at 8 partitions, leaving 3/4 of
+    the cores idle through the whole encode stage (optimization guide §2:
+    derive partitioning from input size). ~2M token values per partition
+    keeps every chunk big enough that the measured ratio cost is <1%
+    (37.07 -> 37.38 MB on the bench corpus) while the encode stage
+    parallelizes ~2x better.
+    """
+    rows = df.groupBy("source").agg(
+        F.count("*").alias("cnt"), F.sum("n_tok").alias("vals")).collect()
+    counts = {r["source"]: int(r["cnt"]) for r in rows}
+    if n_partitions is None:
+        total_vals = sum(int(r["vals"] or 0) for r in rows)
+        n_partitions = min(
+            conf.encode_partitions(conf.local_cores()),
+            max(1, sum(counts.values()) // conf.chunk_rows_default() + 1,
+                total_vals // conf.values_per_partition() + 1),
+        )
+    return plan_salts(counts, n_partitions), counts
+
+
+def _write_staged(chunks: DataFrame, staging: str) -> None:
+    """The source=/salt= staging write every corpus writer promotes from
+    (encode, append, compaction)."""
+    (
+        chunks.write.partitionBy("source", "salt")
+        .option("compression", conf.data_codec())
+        .mode("overwrite")
+        .parquet(staging)
+    )
+
+
+def _stage(spark: SparkSession, tbl: Table, salted: DataFrame,
+           pids: list[str], run_id: str, *, cluster: bool, t0: float,
+           mark, attempts: dict[str, int], retries: int = 0,
+           fail_partitions: frozenset[str] = frozenset(),
+           fail_until_attempt: dict[str, int] | None = None,
+           chunk_ids: tuple[int, int] = (0, 32), wave_idx: int = 0):
+    """Encode the salted rows of `pids` into the run's staging dir.
+
+    Range-partitions on (source, salt), sorts within partitions, encodes
+    under mapInArrow and writes the staging dir, re-running the write up
+    to `retries` times. Every failed attempt is recorded as a 'failed'
+    lineage row and counted in `attempts`. Returns (staged chunk rows,
+    per-partition stats)."""
+    arranged = salted.repartitionByRange(
+        max(len(pids), 1), "source", "salt"
+    ).sortWithinPartitions(*_sort_keys(cluster))
+    staging = tbl.staging_dir(run_id)
+    for try_no in range(max(0, retries) + 1):
+        enc = arranged.mapInArrow(
+            _encode_fn(fail_partitions, fail_until_attempt or {},
+                       dict(attempts), *chunk_ids),
+            CHUNK_SCHEMA,
+        )
+        try:
+            _write_staged(enc, staging)
+            mark("encode_write")
+            break
+        except Exception as exc:
+            # attribute the failure to the partition named in the task
+            # error when parseable; otherwise to a wave marker — never
+            # to every healthy partition in the wave (that over-reports
+            # their attempt counts and misattributes the failure)
+            m = re.search(r"source=[^/\s']+/salt=\d+", str(exc))
+            failed_pids = [m.group(0)] if m and m.group(0) in pids \
+                else [f"wave:{wave_idx}"]
+            now_ms = int((time.time() - t0) * 1000)
+            lineagelib.append(spark, tbl, [
+                (run_id, pid, "encode", "failed", attempts.get(pid, 0) + 1,
+                 None, None, None, None, now_ms)
+                for pid in failed_pids
+            ])
+            for pid in failed_pids:
+                attempts[pid] = attempts.get(pid, 0) + 1
+            if try_no >= max(0, retries):
+                raise
+    staged = spark.read.parquet(staging)
+    return staged, _chunk_stats(staged)
+
+
+def _lineage_rows(run_id: str, stats: list, pids: list[str],
+                  promoted: list[str], attempts: dict[str, int],
+                  t0: float) -> list[tuple]:
+    """One encode lineage row per planned partition: 'done' once promoted
+    ('staged' otherwise); planned-but-empty partitions count as done
+    (nothing to write)."""
+    wall_ms = int((time.time() - t0) * 1000)
+    promoted = set(promoted)
+    rows = [
+        (run_id, r["partition_id"], "encode",
+         "done" if r["partition_id"] in promoted else "staged",
+         attempts.get(r["partition_id"], 0) + 1, r["codecs"],
+         int(r["raw_bytes"]), int(r["encoded_bytes"]), int(r["rows"]), wall_ms)
+        for r in stats
+    ]
+    staged_pids = {r["partition_id"] for r in stats}
+    rows += [
+        (run_id, pid, "encode", "done", attempts.get(pid, 0) + 1,
+         "", 0, 0, 0, wall_ms)
+        for pid in pids if pid not in staged_pids
+    ]
+    return rows
 
 
 def encode_table(
@@ -222,21 +369,19 @@ def encode_table(
 
     cluster=True (default) content-clusters docs within each partition
     before chunking — better ratio at some encode-throughput cost (the
-    measured trade lives in _sort_keys below and both arms are published
+    measured trade lives in _sort_keys above and both arms are published
     in the bench); cluster=False is the opt-out for throughput-bound
     deployments. Decode output is identical either way (chunk boundaries
     move, rows don't).
+
+    summary["sources"] is the plan's per-source row count, recorded in
+    the planned snapshot and read back on resume (None when the caller
+    supplied `salts`).
     """
     tbl = Table(table_path)
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
-    phases: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        phases[name] = round(phases.get(name, 0.0) + (now - _last[0]), 3)
-        _last[0] = now
+    phases, mark = _phase_clock()
     if not resume:
         # non-destructive: demote the snapshot, move the previous table's
         # data/manifest/lineage ASIDE (not delete) — if this encode dies,
@@ -247,169 +392,81 @@ def encode_table(
     snap = tbl.snapshot()
     if resume and snap and "salts" in snap:
         salts = {k: int(v) for k, v in snap["salts"].items()}
-    elif salts is not None:
-        # caller-provided plan (e.g. reused across the two scaling runs)
-        tbl.commit_snapshot({"stage": "planned", "salts": salts,
-                             "run_id": run_id, "schema": "corpus_v1"})
+        sources = snap.get("sources")
     else:
-        rows_ = df.groupBy("source").agg(
-            F.count("*").alias("cnt"), F.sum("n_tok").alias("vals")).collect()
-        counts = {r["source"]: r["cnt"] for r in rows_}
-        if n_partitions is None:
-            # default sizing: scale with cores, but never shred a small
-            # input into sub-chunk partitions (per-chunk overhead would eat
-            # the ratio). Corpus rows are HEAVY (hundreds of tokens), so
-            # the floor is value-based as well as row-based: a row-only
-            # floor sized this bench's 60k-doc / 35M-token corpus at 8
-            # partitions, leaving 3/4 of the cores idle through the whole
-            # encode stage (optimization guide §2: derive partitioning
-            # from input size). ~2M token values per partition keeps every
-            # chunk big enough that the measured ratio cost is <1%
-            # (37.07 -> 37.38 MB on the bench corpus) while the encode
-            # stage parallelizes ~2x better.
-            total_rows = sum(counts.values())
-            total_vals = sum(int(r["vals"] or 0) for r in rows_)
-            n_partitions = min(
-                conf.encode_partitions(conf.local_cores()),
-                max(1, total_rows // conf.chunk_rows_default() + 1,
-                    total_vals // conf.values_per_partition() + 1),
-            )
-        salts = plan_salts(counts, n_partitions)
+        sources = None
+        if salts is None:
+            salts, sources = _plan(df, n_partitions)
+        # a caller-provided plan (e.g. one reused across the two scaling
+        # runs) records no per-source counts
         tbl.commit_snapshot({"stage": "planned", "salts": salts,
-                             "run_id": run_id, "schema": "corpus_v1"})
+                             "sources": sources, "run_id": run_id,
+                             "schema": CORPUS_FORMAT})
 
-    _mark("plan")
+    mark("plan")
     all_pids = partition_ids(salts)
     done = set(lineagelib.done_partitions(spark, tbl)) if resume else set()
     todo = [p for p in all_pids if p not in done]
     if not todo:
         return {"run_id": run_id, "partitions": 0, "skipped": len(done),
-                "wall_s": 0.0, "encoded_bytes": 0}
+                "sources": sources, "wall_s": 0.0, **_totals([])}
 
     salted = df.withColumn("salt", _salt_expr(salts))
+    pid = F.concat(F.lit("source="), F.col("source"),
+                   F.lit("/salt="), F.col("salt").cast("string"))
     if done:
-        done_pairs = [(p.split("/")[0][7:], int(p.split("salt=")[1])) for p in done]
-        cond = F.concat(F.col("source"), F.lit("|"), F.col("salt").cast("string"))
-        done_keys = [f"{s}|{k}" for s, k in done_pairs]
-        salted = salted.filter(~cond.isin(done_keys))
+        salted = salted.filter(~pid.isin(sorted(done)))
 
     wave_groups = np.array_split(np.array(todo), max(1, waves))
-    total_chunks = total_rows = total_values = total_raw = total_enc = 0
+    all_stats: list = []
     attempts = lineagelib.attempt_counts(spark, tbl)
 
     for wave_idx, wave in enumerate(wave_groups):
         wave_pids = [str(p) for p in wave if p]
         if not wave_pids:
             continue
-        wdf = salted
-        if len(wave_groups) > 1:
-            cond = F.concat(F.lit("source="), F.col("source"),
-                            F.lit("/salt="), F.col("salt").cast("string"))
-            wdf = salted.filter(cond.isin(wave_pids))
-
-        n_shuffle = max(len(wave_pids), 1)
-        arranged = wdf.repartitionByRange(n_shuffle, "source", "salt").sortWithinPartitions(
-            *_sort_keys(cluster)
-        )
-
-        staging = tbl.staging_dir(run_id)
-        for try_no in range(max(0, retries) + 1):
-            enc = arranged.mapInArrow(
-                _encode_fn(frozenset(fail_partitions), fail_until_attempt, dict(attempts)),
-                CHUNK_SCHEMA,
-            )
-            try:
-                (
-                    enc.write.partitionBy("source", "salt")
-                    .option("compression", conf.data_codec())
-                    .mode("overwrite")
-                    .parquet(staging)
-                )
-                _mark("encode_write")
-                break
-            except Exception as exc:
-                # attribute the failure to the partition named in the task
-                # error when parseable; otherwise to a wave marker — never
-                # to every healthy partition in the wave (that over-reports
-                # their attempt counts and misattributes the failure)
-                import re as _re
-
-                m = _re.search(r"source=[^/\s']+/salt=\d+", str(exc))
-                failed_pids = [m.group(0)] if m and m.group(0) in wave_pids \
-                    else [f"wave:{wave_idx}"]
-                now_ms = int((time.time() - t0) * 1000)
-                lineagelib.append(spark, tbl, [
-                    (run_id, pid, "encode", "failed", attempts.get(pid, 0) + 1,
-                     None, None, None, None, now_ms)
-                    for pid in failed_pids
-                ])
-                for pid in failed_pids:
-                    attempts[pid] = attempts.get(pid, 0) + 1
-                if try_no >= max(0, retries):
-                    raise
-
-        # manifest + lineage from the staged (blob-free) stats
-        staged = spark.read.parquet(staging)
-        stats = _chunk_stats(staged)
+        wdf = salted.filter(pid.isin(wave_pids)) if len(wave_groups) > 1 else salted
+        staged, stats = _stage(
+            spark, tbl, wdf, wave_pids, run_id, cluster=cluster, t0=t0,
+            mark=mark, attempts=attempts, retries=retries,
+            fail_partitions=frozenset(fail_partitions),
+            fail_until_attempt=fail_until_attempt, wave_idx=wave_idx)
+        # manifest from the staged (blob-free) stats columns
         staged.selectExpr(*_MANIFEST_STACK).write.mode("append").parquet(tbl.manifest_dir)
-        _mark("stats_manifest")
+        mark("stats_manifest")
 
         promoted = tbl.promote_partitions(run_id)
-        now = time.time()
-        lineage_rows = []
-        for r in stats:
-            pid = r["partition_id"]
-            total_chunks += r["chunks"]; total_rows += r["rows"]
-            total_values += r["values"]; total_raw += r["raw"]; total_enc += r["enc"]
-            lineage_rows.append(
-                (run_id, pid, "encode",
-                 "done" if pid in set(promoted) else "staged",
-                 attempts.get(pid, 0) + 1, r["codecs"],
-                 int(r["raw"]), int(r["enc"]), int(r["rows"]),
-                 int((now - t0) * 1000))
-            )
-        # planned-but-empty partitions still count as done (nothing to write)
-        staged_pids = {r["partition_id"] for r in stats}
-        for pid in wave_pids:
-            if pid not in staged_pids:
-                lineage_rows.append(
-                    (run_id, pid, "encode", "done", attempts.get(pid, 0) + 1,
-                     "", 0, 0, 0, int((now - t0) * 1000))
-                )
-        lineagelib.append(spark, tbl, lineage_rows)
-        _mark("promote_lineage")
+        lineagelib.append(spark, tbl, _lineage_rows(
+            run_id, stats, wave_pids, promoted, attempts, t0))
+        all_stats += stats
+        mark("promote_lineage")
 
+    totals = _totals(all_stats)
     final_version = tbl.commit_snapshot(
         {
             "stage": "encoded",
             "salts": salts,
+            "sources": sources,
             "run_id": run_id,
-            "schema": "corpus_v1",
+            "schema": CORPUS_FORMAT,
             "partitions": tbl.partition_dirs(),
             "files": tbl.partition_file_listing(),
             "manifest_files": tbl.manifest_file_listing(),
-            "totals": {
-                "chunks": int(total_chunks), "rows": int(total_rows),
-                "values": int(total_values), "raw_bytes": int(total_raw),
-                "encoded_bytes": int(total_enc),
-            },
+            "totals": totals,
         }
     )
     # the replacing table is now the committed truth — only NOW is it safe
     # to drop the previous table's retired contents
     tbl.purge_retired()
-    _mark("commit")
+    mark("commit")
     return {
         "run_id": run_id,
         "phase_sec": phases,
         "snapshot_version": final_version,
         "partitions": len(todo),
         "skipped": len(done),
-        "chunks": int(total_chunks),
-        "rows": int(total_rows),
-        "values": int(total_values),
-        "raw_bytes": int(total_raw),
-        "encoded_bytes": int(total_enc),
+        "sources": sources,
+        **totals,
         "wall_s": time.time() - t0,
     }
 
@@ -422,10 +479,10 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
     the streaming-ingest sink (SURVEY.md-plus: continuous corpus
     ingestion). Unlike encode_table this neither retires previous state
     nor resumes: each batch stages its chunks and MERGE-promotes the
-    files into the shared source=/salt= dirs, appends manifest rows, and
-    records one lineage wave under the batch's run_id. Snapshot totals
-    accumulate across batches, so snapshot-gated readers always see a
-    consistent 'encoded' stage.
+    files into the shared source=/salt= dirs, writes its own manifest
+    file, and records one lineage wave under the batch's run_id. Snapshot
+    totals are recomputed from the manifest, so snapshot-gated readers
+    always see a consistent 'encoded' stage.
 
     Idempotence across Structured Streaming retries comes from the
     checkpointed batch id: the caller derives run_id from batch_id, and a
@@ -433,43 +490,21 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
     """
     tbl = Table(table_path)
     t0 = time.time()
+    phases, mark = _phase_clock()
     if _run_recorded(spark, tbl, run_id):
-        return {"run_id": run_id, "partitions": 0, "skipped": 1, "rows": 0,
-                "values": 0, "encoded_bytes": 0, "raw_bytes": 0, "chunks": 0,
-                "wall_s": 0.0, "replayed": True}
+        return {"run_id": run_id, "partitions": 0, "skipped": 1,
+                "wall_s": 0.0, "replayed": True, **_totals([])}
 
-    counts = {r["source"]: r["cnt"] for r in
-              df.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
-    if not counts:
-        return {"run_id": run_id, "partitions": 0, "skipped": 0, "rows": 0,
-                "values": 0, "encoded_bytes": 0, "raw_bytes": 0, "chunks": 0,
-                "wall_s": 0.0}
-    total_rows_in = sum(counts.values())
-    if n_partitions is None:
-        n_partitions = min(
-            conf.encode_partitions(conf.local_cores()),
-            max(1, total_rows_in // conf.chunk_rows_default() + 1),
-        )
-    salts = plan_salts(counts, n_partitions)
-
-    salted = df.withColumn("salt", _salt_expr(salts))
-    arranged = salted.repartitionByRange(
-        max(len(partition_ids(salts)), 1), "source", "salt"
-    ).sortWithinPartitions(*_sort_keys(cluster))
-    staging = tbl.staging_dir(run_id)
-    chunk_base, task_shift = _append_chunk_base(run_id)
-    (
-        arranged.mapInArrow(
-            _encode_fn(frozenset(), chunk_base=chunk_base, task_shift=task_shift),
-            CHUNK_SCHEMA,
-        )
-        .write.partitionBy("source", "salt")
-        .option("compression", conf.data_codec())
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    staged = spark.read.parquet(staging)
-    stats = _chunk_stats(staged)
+    salts, _ = _plan(df, n_partitions)
+    if not salts:
+        return {"run_id": run_id, "partitions": 0, "skipped": 0,
+                "wall_s": 0.0, **_totals([])}
+    pids = partition_ids(salts)
+    mark("plan")
+    staged, stats = _stage(
+        spark, tbl, df.withColumn("salt", _salt_expr(salts)), pids, run_id,
+        cluster=cluster, t0=t0, mark=mark, attempts={},
+        chunk_ids=_append_chunk_base(run_id))
     # idempotent manifest: one deterministic file per batch
     # (manifest/append-<run_id>.parquet, atomic os.replace), written
     # driver-side — an at-least-once redelivery overwrites instead of
@@ -480,53 +515,37 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
         key=lambda r: (r["partition_id"], r["chunk_id"], r["column"]),
     )
     _write_manifest_file(tbl, f"append-{run_id}", man_rows)
+    mark("stats_manifest")
     # deterministic <run_id>-<i>.parquet names make the merge-promote
     # itself replay-safe (identical re-encode overwrites, never duplicates)
-    tbl.promote_partitions(run_id, merge=True)
+    promoted = tbl.promote_partitions(run_id, merge=True)
 
-    # doc_id sidecar: one skinny parquet dir per batch, written BEFORE the
-    # lineage wave so any batch the replay-skip can see also has its
-    # sidecar. The streaming cross-batch dedup anti-joins later batches
-    # against these O(batch) files instead of blob-decoding the whole
-    # table per micro-batch (O(table) work per batch = quadratic
-    # cumulative work over a stream's lifetime). mode=overwrite keeps a
-    # redelivered batch idempotent.
+    # sidecars, written BEFORE the lineage rows so any batch the replay
+    # skip can see has them, mode=overwrite so a redelivery is idempotent:
+    # the doc_id sidecar lets the streaming cross-batch dedup anti-join
+    # O(batch) skinny files instead of blob-decoding the table per batch;
+    # the (doc_id, simhash) sidecar is the incremental near-dup index (the
+    # caller computes the signatures: they need the raw text)
     df.select("doc_id").write.mode("overwrite").parquet(
         tbl.docid_sidecar_dir(run_id))
-    # near-dup signature sidecar (doc_id, simhash): the incremental
-    # near-dup index. Written before lineage for the same replay-skip
-    # coverage reason, overwrite for the same idempotency. The caller
-    # computes the signatures (they need the raw text, which the corpus
-    # frame no longer carries); this layer only persists and accounts
-    # for them.
     if signatures is not None:
         signatures.select("doc_id", "simhash").write.mode(
             "overwrite").parquet(tbl.sig_sidecar_dir(run_id))
 
-    now_ms = int((time.time() - t0) * 1000)
-    lineagelib.append(spark, tbl, [
-        (run_id, r["partition_id"], "encode", "done", 1, r["codecs"],
-         int(r["raw"]), int(r["enc"]), int(r["rows"]), now_ms)
-        for r in stats
-    ])
-    batch = {
-        "chunks": sum(int(r["chunks"]) for r in stats),
-        "rows": sum(int(r["rows"]) for r in stats),
-        "values": sum(int(r["values"]) for r in stats),
-        "raw_bytes": sum(int(r["raw"]) for r in stats),
-        "encoded_bytes": sum(int(r["enc"]) for r in stats),
-    }
+    lineagelib.append(spark, tbl, _lineage_rows(
+        run_id, stats, pids, promoted, {}, t0))
+    mark("promote_lineage")
     # snapshot totals recomputed from the duplicate-free manifest instead
     # of accumulated from the previous snapshot — correct under ANY retry
     # interleaving (a replayed batch can never double-count)
-    man = spark.read.parquet(tbl.manifest_dir)
-    tot = (
-        man.filter(F.col("column") == "tokens")
-        .agg(F.count("*").alias("chunks"), F.sum("n_rows").alias("rows"),
-             F.sum("n_values").alias("values"), F.sum("raw_bytes").alias("raw"))
-        .first()
-    )
-    enc_total = man.agg(F.sum("encoded_bytes")).first()[0]
+    # (one pass: chunk-level counts from the tokens rows, bytes from all)
+    tok = F.col("column") == "tokens"
+    tot = spark.read.parquet(tbl.manifest_dir).agg(
+        F.count(F.when(tok, 1)).alias("chunks"),
+        *[F.sum(F.when(tok, F.col(c))).alias(a) for c, a in
+          (("n_rows", "rows"), ("n_values", "values"), ("raw_bytes", "raw_bytes"))],
+        F.sum("encoded_bytes").alias("encoded_bytes"),
+    ).first()
     prev_snap = tbl.snapshot() or {}
     prev_runs = list(prev_snap.get("runs") or [])
     # coverage marker for the sidecar-based seen_doc_ids fast path: True
@@ -543,15 +562,10 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
     sigs_cover = (signatures is not None) and (
         (not prev_snap) or bool(prev_snap.get("sigs_cover_table")))
     prev_sig_runs = list(prev_snap.get("sig_runs") or [])
-    extra = {}
-    if prev_snap.get("docid_merged"):
-        # carry the merged-sidecar reference forward — dropping it would
-        # orphan the merged dir and fail the seen-set coverage check
-        extra["docid_merged"] = prev_snap["docid_merged"]
-    if prev_snap.get("sig_merged"):
-        extra["sig_merged"] = prev_snap["sig_merged"]
-    if prev_snap.get("last_compaction"):
-        extra["last_compaction"] = prev_snap["last_compaction"]
+    # carry the merged-sidecar references forward — dropping one would
+    # orphan the merged dir and fail the seen-set coverage check
+    extra = {k: prev_snap[k] for k in ("docid_merged", "sig_merged", "last_compaction")
+             if prev_snap.get(k)}
     tbl.commit_snapshot({
         **extra,
         "stage": "encoded",
@@ -565,18 +579,15 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
         "sig_runs": sorted(set(prev_sig_runs) | {run_id})
         if signatures is not None else prev_sig_runs,
         "sigs_cover_table": sigs_cover,
-        "schema": "corpus_v1",
+        "schema": CORPUS_FORMAT,
         "partitions": tbl.partition_dirs(),
         "files": tbl.partition_file_listing(),
         "manifest_files": tbl.manifest_file_listing(),
-        "totals": {
-            "chunks": int(tot["chunks"]), "rows": int(tot["rows"]),
-            "values": int(tot["values"]), "raw_bytes": int(tot["raw"]),
-            "encoded_bytes": int(enc_total),
-        },
+        "totals": {k: int(v) for k, v in tot.asDict().items()},
     })
-    return {"run_id": run_id, "partitions": len(stats), "skipped": 0,
-            "wall_s": time.time() - t0, **batch}
+    mark("commit")
+    return {"run_id": run_id, "phase_sec": phases, "partitions": len(pids),
+            "skipped": 0, "wall_s": time.time() - t0, **_totals(stats)}
 
 
 def _write_manifest_file(tbl: Table, name: str, rows: list) -> None:
@@ -586,15 +597,9 @@ def _write_manifest_file(tbl: Table, name: str, rows: list) -> None:
 
     import pyarrow.parquet as pq
 
-    from eggopress.schema import MANIFEST_SCHEMA
-
-    types = [pa.string(), pa.int64(), pa.string(), pa.string(), pa.int32(),
-             pa.int64(), pa.int64(), pa.int64(), pa.int32(), pa.int32(),
-             pa.int32(), pa.int32()]
-    names = [f.name for f in MANIFEST_SCHEMA.fields]
     # collected Rows carry stack() column order; re-map by field name
-    cols = {n: [r[n] for r in rows] for n in names}
-    table = pa.table({n: pa.array(cols[n], type=t) for n, t in zip(names, types)})
+    table = pa.table({f.name: pa.array([r[f.name] for r in rows], type=f.type)
+                      for f in to_arrow_schema(MANIFEST_SCHEMA)})
     _os.makedirs(tbl.manifest_dir, exist_ok=True)
     final = _os.path.join(tbl.manifest_dir, f"{name}.parquet")
     # tmp lives OUTSIDE the manifest dir: a crash must never leave a
@@ -617,9 +622,7 @@ def _append_chunk_base(run_id: str) -> tuple[int, int]:
     weaken the (partition_id, chunk_id, column) manifest key. Non-stream
     run_ids (ad-hoc appends, bounded in count) keep the hash namespace.
     """
-    import re as _re
-
-    m = _re.fullmatch(r"stream-(\d+)", run_id)
+    m = re.fullmatch(r"stream-(\d+)", run_id)
     if m:
         batch_no = int(m.group(1)) & 0xFFFFFFFF
         return (1 << 62) | (batch_no << 30), 15
@@ -635,18 +638,15 @@ def _run_recorded(spark: SparkSession, tbl: Table, run_id: str) -> bool:
     job, no growth with stream lifetime. Slow path (run absent from the
     snapshot): the lineage table, filtered to this run_id — covers the
     crash window where the lineage wave landed but the snapshot commit
-    didn't. The previous implementation collected ALL distinct lineage
-    run_ids every batch, an O(stream lifetime) scan per micro-batch."""
+    didn't."""
     if run_id in ((tbl.snapshot() or {}).get("runs") or []):
         return True
-    import os as _os
-
-    if not (_os.path.isdir(tbl.lineage_dir)
-            and any(f.endswith(".parquet") for f in _os.listdir(tbl.lineage_dir))):
-        return False
+    # only a 'done' row commits a run: a recorded failure leaves the batch
+    # to be replayed
     return bool(
         lineagelib.read(spark, tbl)
-        .filter(F.col("run_id") == run_id).limit(1).count()
+        .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .limit(1).count()
     )
 
 

@@ -108,29 +108,20 @@ def ingest_table(spark: SparkSession, docs: DataFrame, table_path: str, *,
     """documents -> tokenize -> encoded table, with per-source 'ingest'
     lineage rows (row counts per resource/source label).
 
-    The per-source counts double as the encode salt plan input, so the
-    provenance rows cost no extra job beyond what planning already needs.
+    The counts are encode_table's plan (summary["sources"], read back
+    from the planned snapshot on resume), so the provenance rows cost no
+    job of their own.
     """
-    from eggopress import conf, encode, lineage
+    from eggopress import encode, lineage
     from eggopress.pipeline import textstats
     from eggopress.tablefmt import Table
 
     corpus = textstats.tokenize(docs, make_ids=False)
-    counts = {r["source"]: r["cnt"] for r in
-              corpus.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
-    if n_partitions is None:
-        total_rows = sum(counts.values())
-        n_partitions = min(
-            conf.encode_partitions(conf.local_cores()),
-            max(1, total_rows // conf.chunk_rows_default() + 1),
-        )
-    salts = None if resume else encode.plan_salts(counts, n_partitions)
     summary = encode.encode_table(spark, corpus, table_path,
-                                  salts=salts, resume=resume)
+                                  n_partitions=n_partitions, resume=resume)
     lineage.append(spark, Table(table_path), [
         (summary["run_id"], f"resource:{src}", "ingest", "done", 1,
          None, None, None, int(n), 0)
-        for src, n in sorted(counts.items())
+        for src, n in sorted((summary["sources"] or {}).items())
     ])
-    summary["sources"] = counts
     return summary

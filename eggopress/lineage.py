@@ -13,6 +13,7 @@ import datetime
 import os
 
 from pyspark.sql import SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from eggopress.schema import LINEAGE_SCHEMA
 from eggopress.tablefmt import Table
@@ -49,16 +50,10 @@ def append(spark: SparkSession, tbl: Table, rows: list[tuple]) -> None:
     # tz=UTC column, so a naive local-time value would shift by the host's
     # UTC offset on any non-UTC machine
     now = datetime.datetime.now(datetime.timezone.utc)
-    full = [r + (now,) for r in rows]
-    cols = list(zip(*full))
-    # tz-aware micros => Spark reads TimestampType (matches LINEAGE_SCHEMA)
-    types = [pa.string(), pa.string(), pa.string(), pa.string(), pa.int32(),
-             pa.string(), pa.int64(), pa.int64(), pa.int64(), pa.int64(),
-             pa.timestamp("us", tz="UTC")]
-    names = [f.name for f in LINEAGE_SCHEMA.fields]
-    table = pa.table(
-        {n: pa.array(list(c), type=t) for n, c, t in zip(names, cols, types)}
-    )
+    cols = zip(*[r + (now,) for r in rows])
+    # ts is tz-aware micros, so Spark reads TimestampType back
+    table = pa.table({f.name: pa.array(list(c), type=f.type)
+                      for f, c in zip(to_arrow_schema(LINEAGE_SCHEMA), cols)})
     os.makedirs(tbl.lineage_dir, exist_ok=True)
     pq.write_table(
         table, os.path.join(tbl.lineage_dir, f"part-{uuid.uuid4().hex}.parquet")

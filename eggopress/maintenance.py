@@ -10,7 +10,7 @@ Chunk rows are immutable and self-describing (codec + params ride in the
 blob header), so compaction never touches a codec: it is a pure
 file-level rewrite — read the fat partitions' chunk rows, one shuffle on
 the partition key so each source=/salt= dir is written by one task as one
-file, then the same staging/atomic-promote path the encoder uses. Decoded
+file, then the encoder's staged writer and atomic promote. Decoded
 bytes are identical before and after (tested with exceptAll both ways).
 """
 
@@ -22,7 +22,8 @@ import uuid
 
 from pyspark.sql import SparkSession, functions as F
 
-from eggopress import conf, lineage as lineagelib
+from eggopress import lineage as lineagelib
+from eggopress.encode import _write_staged
 from eggopress.tablefmt import Table
 
 
@@ -314,20 +315,6 @@ def _merge_sidecar_index(spark: SparkSession, tbl: Table, run_id: str,
     return {"dir": merged_name, "runs": sorted(covered | set(fresh))}
 
 
-def _merge_docid_sidecars(spark: SparkSession, tbl: Table, run_id: str):
-    snap = tbl.snapshot() or {}
-    return _merge_sidecar_index(
-        spark, tbl, run_id, tbl.docid_index_dir, tbl.docid_sidecar_dir,
-        list(snap.get("runs") or []), snap.get("docid_merged") or {})
-
-
-def _merge_sig_sidecars(spark: SparkSession, tbl: Table, run_id: str):
-    snap = tbl.snapshot() or {}
-    return _merge_sidecar_index(
-        spark, tbl, run_id, tbl.sig_index_dir, tbl.sig_sidecar_dir,
-        list(snap.get("sig_runs") or []), snap.get("sig_merged") or {})
-
-
 def compact_table(spark: SparkSession, table_path: str, *,
                   min_files: int = 2, run_id: str | None = None) -> dict:
     """Rewrite every partition holding >= min_files chunk files into one
@@ -350,14 +337,7 @@ def compact_table(spark: SparkSession, table_path: str, *,
     # basePath keeps the source=/salt= columns when reading partition
     # subdirs directly (only the fat partitions are rewritten or even read)
     chunks = spark.read.option("basePath", tbl.data_dir).parquet(*paths)
-    staging = tbl.staging_dir(run_id)
-    (
-        chunks.repartition("source", "salt")
-        .write.partitionBy("source", "salt")
-        .option("compression", conf.data_codec())
-        .mode("overwrite")
-        .parquet(staging)
-    )
+    _write_staged(chunks.repartition("source", "salt"), tbl.staging_dir(run_id))
     promoted = tbl.promote_partitions(run_id)  # replace semantics
     after = partition_file_counts(tbl)
     now_ms = int((time.time() - t0) * 1000)
@@ -366,18 +346,21 @@ def compact_table(spark: SparkSession, table_path: str, *,
          f"files:{fat[pid]}->{after.get(pid, 0)}", None, None, None, now_ms)
         for pid in sorted(fat)
     ])
-    docid_merged = _merge_docid_sidecars(spark, tbl, run_id)
-    sig_merged = _merge_sig_sidecars(spark, tbl, run_id)
     snap = dict(tbl.snapshot() or {})
+    for runs_key, merged_key, index_dir, sidecar_dir in (
+        ("runs", "docid_merged", tbl.docid_index_dir, tbl.docid_sidecar_dir),
+        ("sig_runs", "sig_merged", tbl.sig_index_dir, tbl.sig_sidecar_dir),
+    ):
+        merged = _merge_sidecar_index(
+            spark, tbl, run_id, index_dir, sidecar_dir,
+            list(snap.get(runs_key) or []), snap.get(merged_key) or {})
+        if merged is not None:
+            snap[merged_key] = merged
     snap["stage"] = "encoded"
     snap["partitions"] = tbl.partition_dirs()
     snap["files"] = tbl.partition_file_listing()
     snap["manifest_files"] = tbl.manifest_file_listing()
     snap["last_compaction"] = run_id
-    if docid_merged is not None:
-        snap["docid_merged"] = docid_merged
-    if sig_merged is not None:
-        snap["sig_merged"] = sig_merged
     tbl.commit_snapshot(snap)
     return {
         "run_id": run_id,

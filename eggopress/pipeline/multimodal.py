@@ -88,15 +88,6 @@ def attach_binary(df: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes):
-    """Full pixel decode of compressed media would go here (PIL/ffmpeg).
-    STUB: the container ships no media libraries — header parsing (the
-    part expressible with numpy alone) lives in extract_features."""
-    raise NotImplementedError(
-        "pixel decode stubbed: no image/audio libraries in this environment"
-    )
-
-
 def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched BMP header decode over binary payloads (mapInPandas).
 

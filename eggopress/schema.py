@@ -10,6 +10,9 @@ from __future__ import annotations
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+# On-disk format tag of corpus tables, recorded in every snapshot.
+CORPUS_FORMAT = "corpus_v1"
+
 # The authoritative input shape: pre-tokenized training sequences.
 CORPUS_SCHEMA = T.StructType(
     [

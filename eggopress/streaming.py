@@ -151,46 +151,6 @@ def stream_ingest(spark: SparkSession, input_dir: str, table_path: str, *,
     return writer.start()
 
 
-def stream_running_totals(spark: SparkSession, input_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): a
-    per-source RUNNING ingest counter — cumulative docs/chars emitted
-    every micro-batch, state carried across batches in an explicit
-    GroupState.
-
-    This is the engine's template for operators Structured Streaming's
-    built-ins can't express (running totals, sessionization, per-key
-    ratcheting): state is a fixed-width tuple PER KEY (two ints per
-    source here), never per-row — checkpoint state size is O(sources)
-    regardless of stream lifetime, the bounded-state discipline the rest
-    of the streaming path follows. Arrow-batched like every other UDF
-    surface in the engine (no per-row Python)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    raw = spark.readStream.schema(DOCS_STREAM_SCHEMA).json(input_dir)
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        n, chars = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            chars += int(pdf["text"].str.len().sum())
-        state.update((n, chars))
-        yield pd.DataFrame({
-            "source": [key[0]],
-            "n_docs_total": [n],
-            "n_chars_total": [chars],
-        })
-
-    return raw.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType="source string, n_docs_total long, n_chars_total long",
-        stateStructType="n long, chars long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_stats(spark: SparkSession, input_dir: str, *,
                  window: str = "1 minute",
                  watermark: str = "2 minutes") -> DataFrame:

@@ -159,12 +159,3 @@ def corpus_df(spark, n_docs: int, seed: int = SEED):
 
     return blocks.mapInArrow(gen, CORPUS_SCHEMA)
 
-
-def corpus_pandas(n_docs: int, seed: int = SEED):
-    """Driver-side corpus (small scales) as a pyarrow Table."""
-    n_blocks = (n_docs + BLOCK_DOCS - 1) // BLOCK_DOCS
-    batches = []
-    for bid in range(n_blocks):
-        take = min(BLOCK_DOCS, n_docs - bid * BLOCK_DOCS)
-        batches.append(gen_block(bid, take, seed))
-    return pa.Table.from_batches(batches, schema=CORPUS_ARROW_SCHEMA)

@@ -23,6 +23,8 @@ import os
 import shutil
 import time
 
+from eggopress.schema import CORPUS_FORMAT
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same next version first (optimistic
@@ -110,20 +112,6 @@ class Table:
         os.replace(hint_tmp, os.path.join(self.meta_dir, "version-hint.txt"))
         return v
 
-    def clear_state(self) -> None:
-        """Fresh-encode semantics: drop data/manifest/lineage and any stale
-        staging dirs so a non-resume encode never inherits partitions from
-        a previous plan (which would decode as phantom/duplicate rows).
-        Snapshot history in metadata/ is kept — the new encode commits the
-        next version."""
-        for d in (self.data_dir, self.manifest_dir, self.lineage_dir,
-                  os.path.join(self.path, "index")):
-            shutil.rmtree(d, ignore_errors=True)
-        if os.path.isdir(self.path):
-            for ent in os.listdir(self.path):
-                if ent.startswith("_staging_"):
-                    shutil.rmtree(os.path.join(self.path, ent), ignore_errors=True)
-
     def retire_state(self, run_id: str) -> str | None:
         """Non-destructive fresh-encode prep: demote the snapshot FIRST
         (readers gating on stage='encoded' must never see a valid snapshot
@@ -136,7 +124,7 @@ class Table:
         dir, or None when there was nothing to retire."""
         if self.snapshot() is not None:
             self.commit_snapshot({"stage": "retiring", "run_id": run_id,
-                                  "schema": "corpus_v1"})
+                                  "schema": CORPUS_FORMAT})
         retired = os.path.join(self.path, f"_retired_{run_id}")
         moved = False
         for d in (self.data_dir, self.manifest_dir, self.lineage_dir,

@@ -28,8 +28,8 @@ def encoded_table(spark, corpus, tmp_path_factory):
 
 
 def test_synth_deterministic(spark):
-    a = synth.corpus_pandas(500)
-    b = synth.corpus_pandas(500)
+    a = synth.gen_block(0, 500)
+    b = synth.gen_block(0, 500)
     assert a.equals(b)
     # parallelism-independence: Spark-generated content == driver-side content
     df = synth.corpus_df(spark, 500).toPandas().sort_values("doc_id").reset_index(drop=True)

@@ -151,30 +151,29 @@ def test_doc_lookup_is_request_proportional(spark, tmp_path):
     assert decode.lookup_docs(spark, table, []).count() == 0
     assert decode.lookup_docs(spark, table, ["nope-999999"]).count() == 0
 
-    # an append makes the index stale -> loud refusal; INCREMENTAL update
-    # indexes only the new batch's files and restores lookups
+    # an append makes the index stale -> loud refusal; a rebuild indexes
+    # the new batch and restores lookups
     extra = spark.createDataFrame(
         [("extra-000001", [1, 2, 3], 3, "short")],
         "doc_id string, tokens array<int>, n_tok int, source string")
     encode.encode_append(spark, extra, table, run_id="lkA")
     with pytest.raises(ValueError, match="stale"):
         decode.lookup_docs(spark, table, ids)
-    upd = decode.update_doc_index(spark, table)
-    assert upd["mode"] == "incremental" and upd["new_files"] >= 1
+    decode.build_doc_index(spark, table)
     assert decode.lookup_docs(spark, table, ["extra-000001"]).count() == 1
     assert decode.lookup_docs(spark, table, ids).count() == len(ids)
-    assert decode.update_doc_index(spark, table)["mode"] == "current"
 
-    # a compaction rewrites file names: the listing diff can't attribute
-    # rows anymore, so update falls back to a full rebuild
+    # a compaction rewrites file names: the index is stale again until
+    # rebuilt
     from eggopress import maintenance
 
     encode.encode_append(spark, extra.selectExpr(
         "'extra-000002' as doc_id", "tokens", "n_tok", "source"),
         table, run_id="lkB")
     maintenance.compact_table(spark, table, min_files=1)
-    upd2 = decode.update_doc_index(spark, table)
-    assert upd2["mode"] == "rebuild_after_rewrite"
+    with pytest.raises(ValueError, match="stale"):
+        decode.lookup_docs(spark, table, ["extra-000002"])
+    decode.build_doc_index(spark, table)
     assert decode.lookup_docs(spark, table, ["extra-000002"]).count() == 1
 
 

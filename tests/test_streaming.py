@@ -707,35 +707,6 @@ def test_append_chunk_ids_unique_across_many_stream_batches(spark):
     assert ahshift == 32 and ahbase < (1 << 62) and (ahbase & ((1 << 48) - 1)) == 0
 
 
-def test_stream_running_totals_stateful(spark, tmp_path):
-    """applyInPandasWithState running counter: state carries across
-    micro-batches (cumulative totals grow batch over batch) and the final
-    emission equals the batch-path ground truth. State is O(sources)."""
-    landing = _landing(tmp_path, n_files=3)  # src0, src1, src0 per file
-    out = streaming.stream_running_totals(spark, landing)
-    q = (
-        out.writeStream.format("memory").queryName("running_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_rt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM running_totals").collect()
-    assert rows
-    final = {}
-    for r in rows:  # update mode appends one emission per (batch, source)
-        cur = final.get(r["source"], (0, 0))
-        final[r["source"]] = max(cur, (r["n_docs_total"], r["n_chars_total"]))
-    truth = {
-        r["source"]: (r["n"], r["c"])
-        for r in spark.read.schema(streaming.DOCS_STREAM_SCHEMA).json(landing)
-        .groupBy("source")
-        .agg(F.count("*").alias("n"), F.sum(F.length("text")).alias("c"))
-        .collect()
-    }
-    assert final == truth
-
-
 def test_compaction_merges_docid_sidecars(spark, tmp_path):
     """Compaction folds per-run doc_id sidecars into ONE merged dir so
     the seen-set listing stays O(runs since last compaction) instead of

@@ -122,6 +122,32 @@ def test_toast_resumes_after_encode_without_reencoding(spark, tmp_path):
         "resume must not re-encode any partition"
 
 
+def test_toast_resuming_encode_keeps_ingest_counts(spark, tmp_path):
+    """A toast whose encode died after its first wave resumes the encode;
+    the per-source counts come back from the planned snapshot, so the
+    summary's sources and the ingest lineage rows match a fresh ingest."""
+    from eggopress import encode
+    from eggopress.pipeline import textstats
+
+    manifest = _write_resources(tmp_path)
+    table = str(tmp_path / "toast_resume_mid")
+    counts = {"web": 80, "books": 40}
+    corpus = textstats.tokenize(
+        ingest.load_manifest_documents(spark, manifest), make_ids=False)
+    poison = encode.partition_ids(encode.plan_salts(counts, 4))[-1]
+    with pytest.raises(Exception):
+        encode.encode_table(spark, corpus, table, n_partitions=4, waves=2,
+                            fail_partitions=frozenset([poison]))
+    assert lineage.done_partitions(spark, Table(table))
+
+    result = toastlib.toast(spark, table, manifest=manifest)
+    assert result["stages"]["verify"]["roundtrip_ok"] is True
+    assert Table(table).snapshot()["sources"] == counts
+    lin = lineage.read(spark, Table(table)).filter(F.col("stage") == "ingest")
+    assert {r["partition_id"]: r["row_count"] for r in lin.collect()} == {
+        "resource:web": 80, "resource:books": 40}
+
+
 def test_toast_cli(spark, tmp_path, capsys):
     manifest = _write_resources(tmp_path)
     table = str(tmp_path / "toast_cli_tbl")
