@@ -115,30 +115,11 @@ _ENCODERS = {
 STR_CODECS = tuple(_ENCODERS)
 
 
-def encode_strs(lengths: np.ndarray, buf: bytes,
-                candidates: tuple[str, ...] = STR_CODECS) -> bytes:
-    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
-    s_len, s_buf = _slice(lengths, buf, SAMPLE_ROWS)
-    if candidates == STR_CODECS:
-        return _encode_strs_default(lengths, buf, s_len, s_buf)
-    best_name, best_size = "str_plain", None
-    for name in candidates:
-        size = len(_ENCODERS[name](s_len, s_buf))
-        if best_size is None or size < best_size:
-            best_name, best_size = name, size
-    blob = _ENCODERS[best_name](lengths, buf)
-    if best_name != "str_plain":
-        p = enc_str_plain(lengths, buf)
-        if len(blob) >= len(p):
-            return p
-    return blob
-
-
-def _encode_strs_default(lengths: np.ndarray, buf: bytes,
-                         s_len: np.ndarray, s_buf: bytes) -> bytes:
-    """Default-candidates selection with provably-redundant work removed.
-    Byte-identical to the generic loop above over (plain, fsst, dict) —
-    pinned by test_encode_strs_matches_reference_selection:
+def encode_strs(lengths: np.ndarray, buf: bytes) -> bytes:
+    """Sampled argmin over (plain, fsst, dict) with provably-redundant
+    work removed. Byte-identical to probing every codec on the sample,
+    full-encoding the winner and guarding it against full plain — pinned
+    by test_encode_strs_matches_reference_selection:
 
     - the sample lengths blob is computed ONCE and shared by the plain
       and fsst probes (both embed the identical encode_ints(lengths)
@@ -157,6 +138,8 @@ def _encode_strs_default(lengths: np.ndarray, buf: bytes,
       already <= len(buf): the full plain blob embeds buf verbatim plus
       a non-empty header and lengths stream, so it is strictly larger
       and can never be returned."""
+    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
+    s_len, s_buf = _slice(lengths, buf, SAMPLE_ROWS)
     sample_is_full = len(lengths) <= SAMPLE_ROWS
     s_lblob = encode_ints(s_len)
     p_blob = enc_str_plain(s_len, s_buf, _lblob=s_lblob)

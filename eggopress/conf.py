@@ -40,10 +40,18 @@ def encode_partitions(total_cores: int) -> int:
     return max(2 * total_cores, 8)
 
 
-def chunk_rows_default() -> int:
-    """Arrow batch size for the encode pass — constant w.r.t. cluster size
-    so per-chunk memory is bounded regardless of scale."""
-    return int(os.environ.get("EGGOPRESS_CHUNK_ROWS", "8192"))
+# Arrow batch size for the encode pass: constant w.r.t. cluster size so
+# per-chunk memory is bounded regardless of scale.
+CHUNK_ROWS = 8192
+
+# Parquet page compression for the chunk-blob data files. A MEASURED
+# choice, not an assumption: the original 'codec blobs are already
+# compressed, write uncompressed' reasoning was falsified at 40% (zstd
+# page compression over the written chunk files shrank the bench corpus
+# data dir 20.6 -> 12.4 MB; snappy 27%). Per-chunk codecs can't see
+# redundancy ACROSS rows/chunks inside a page — repeated doc prefixes,
+# FSST symbol tables, correlated pfor side streams — and zstd can.
+DATA_CODEC = "zstd"
 
 
 def values_per_partition() -> int:
@@ -53,102 +61,21 @@ def values_per_partition() -> int:
     return int(os.environ.get("EGGOPRESS_VALUES_PER_PART", "2000000"))
 
 
-def data_codec() -> str:
-    """Parquet page compression for the chunk-blob data files.
-
-    zstd default — a MEASURED choice, not an assumption: the original
-    'codec blobs are already compressed, write uncompressed' reasoning
-    was falsified at 40% (zstd page compression over the written chunk
-    files shrank the bench corpus data dir 20.6 -> 12.4 MB; snappy 27%).
-    Per-chunk codecs can't see redundancy ACROSS rows/chunks inside a
-    page — repeated doc prefixes, FSST symbol tables, correlated pfor
-    side streams — and zstd can. Override with EGGOPRESS_DATA_CODEC
-    (e.g. 'uncompressed' to trade ratio back for decode CPU)."""
-    return os.environ.get("EGGOPRESS_DATA_CODEC", "zstd")
-
-
 def local_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
 
 
-def prewarm_python_workers(spark) -> None:
-    """Pre-spawn the session's Python worker pool (opt out with
-    EGGOPRESS_PREWARM=0).
-
-    The first Arrow-UDF stage of a session otherwise pays ~0.15s per
-    worker (daemon fork + numpy/pyarrow import) — measured ~4.5s wall for
-    32 workers on this host — and that one-time pool cost lands on
-    whichever query happens to run first. One trivial mapInArrow over
-    2 x defaultParallelism tiny partitions forks every worker and warms
-    the imports during session INIT, where pool startup belongs; every
-    later stage then measures steady-state compute. (Optimization-guide
-    §1: measure the computation, not the harness cold start.)"""
-    if os.environ.get("EGGOPRESS_PREWARM", "1") == "0":
-        return
-
-    def _warm(batches):
-        import numpy  # noqa: F401  (worker-side import warmup)
-        import pyarrow  # noqa: F401
-        for b in batches:
-            yield b
-
-    n = max(spark.sparkContext.defaultParallelism * 2, 2)
-    spark.range(n).repartition(n).mapInArrow(_warm, "id long").count()
-    # ... and the JVM operator machinery: one tiny query through the
-    # common physical operators (hash aggregate, window, sort-merge and
-    # broadcast joins, sort) class-loads and JIT-seeds the shared
-    # execution paths (shuffle writers, codegen compiler, Arrow
-    # serializers). Query-specific generated code still compiles per
-    # query, but the shared infrastructure no longer bills its first-use
-    # cost to whichever real query runs first.
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    df = spark.range(2000).select(
-        F.col("id"), (F.col("id") % 7).alias("k"),
-        F.col("id").cast("string").alias("s"))
-    w = Window.partitionBy("k").orderBy("id")
-    (
-        df.withColumn("rn", F.row_number().over(w))
-        .join(df.select(F.col("k"), F.col("id").alias("id2")), "k")
-        .join(F.broadcast(df.select("k").distinct()), "k")
-        .groupBy("k").agg(F.sum("id2").alias("t"))
-        .orderBy("t").count()
-    )
-
-    def _warm_pd(batches):
-        for b in batches:  # pandas serializer path (distinct from Arrow's)
-            yield b
-
-    df.limit(64).mapInPandas(_warm_pd, "id long, k long, s string").count()
-    # parquet writer/committer + data codec classes: one tiny write+read
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="eggopress-prewarm-")
-    try:
-        df.limit(64).write.mode("overwrite").option(
-            "compression", data_codec()).parquet(d)
-        spark.read.parquet(d).count()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def session_builder(app: str, cores: int | None = None, shuffle: int | None = None):
-    """SparkSession builder with the engine's standard local config.
-
-    The returned builder's getOrCreate() additionally pre-spawns the
-    Python worker pool (see prewarm_python_workers) so no query pays the
-    one-time worker fork/import cost."""
+    """SparkSession builder with the engine's standard local config."""
     from pyspark.sql import SparkSession
 
     c = cores or local_cores()
-    builder = (
+    return (
         SparkSession.builder.master(f"local[{c}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle or shuffle_partitions(c)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(chunk_rows_default()))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(CHUNK_ROWS))
         .config("spark.sql.adaptive.enabled", "true")
         # shuffle/spill on the fastest local medium (tmpfs in-sandbox; on a
         # real cluster point EGGOPRESS_LOCAL_DIR at NVMe)
@@ -158,18 +85,8 @@ def session_builder(app: str, cores: int | None = None, shuffle: int | None = No
         # shuffle volume enough to beat lz4 at every multi-core level
         # measured here (+27% tokens/sec at 16 cores) and matters more on
         # a real cluster where the shuffle is network, not tmpfs
-        .config("spark.io.compression.codec",
-                os.environ.get("EGGOPRESS_SHUFFLE_CODEC", "zstd"))
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("EGGOPRESS_DRIVER_MEM", "8g"))
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.parquet.enableVectorizedReader", "true")
     )
-    orig_get_or_create = builder.getOrCreate
-
-    def _get_or_create():
-        spark = orig_get_or_create()
-        prewarm_python_workers(spark)
-        return spark
-
-    builder.getOrCreate = _get_or_create
-    return builder

@@ -252,7 +252,7 @@ def _plan(df: DataFrame, n_partitions: int | None) -> tuple[dict, dict]:
         total_vals = sum(int(r["vals"] or 0) for r in rows)
         n_partitions = min(
             conf.encode_partitions(conf.local_cores()),
-            max(1, sum(counts.values()) // conf.chunk_rows_default() + 1,
+            max(1, sum(counts.values()) // conf.CHUNK_ROWS + 1,
                 total_vals // conf.values_per_partition() + 1),
         )
     return plan_salts(counts, n_partitions), counts
@@ -263,7 +263,7 @@ def _write_staged(chunks: DataFrame, staging: str) -> None:
     (encode, append, compaction)."""
     (
         chunks.write.partitionBy("source", "salt")
-        .option("compression", conf.data_codec())
+        .option("compression", conf.DATA_CODEC)
         .mode("overwrite")
         .parquet(staging)
     )

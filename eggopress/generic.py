@@ -155,7 +155,7 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
     names = list(df.columns)
     kinds = {f.name: _colkind(f.dataType) for f in df.schema.fields}
     out_schema = _chunk_schema(names, kinds)
-    rows_per_chunk = chunk_rows or conf.chunk_rows_default()
+    rows_per_chunk = chunk_rows or conf.CHUNK_ROWS
 
     if cluster_mode not in ("range", "zorder"):
         raise ValueError(f"unknown cluster_mode: {cluster_mode!r}")
@@ -237,7 +237,7 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
     encoded = df.mapInArrow(encode_fn, from_arrow_schema(out_schema))
     data_dir = os.path.join(path, "data")
     encoded.write.mode("overwrite").option(
-        "compression", conf.data_codec()).parquet(data_dir)
+        "compression", conf.DATA_CODEC).parquet(data_dir)
 
     chunks = spark.read.parquet(data_dir)
     tot = chunks.agg(

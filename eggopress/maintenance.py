@@ -176,6 +176,9 @@ def rollback_table(spark: SparkSession, table_path: str, version: int, *,
 
     Only append-mode history is rollback-able: a batch re-encode replaces
     files wholesale, so there is nothing on disk to roll back to (raises).
+    The target must still have every data file it lists and must record
+    its manifest listing; a target that fails either check is refused
+    before any file moves.
     """
     import json
     import uuid as _uuid
@@ -191,7 +194,16 @@ def rollback_table(spark: SparkSession, table_path: str, version: int, *,
             f"v{version} is not an encoded append snapshot (stage="
             f"{target.get('stage')!r}, mode={target.get('mode')!r})"
         )
+    # validate the target fully before anything moves: a refused
+    # rollback must leave the table exactly as it was
     visible = set(tbl.files_at_version(version))  # validates existence
+    # manifest retirement is decided from the TARGET snapshot's recorded
+    # manifest state, never inferred from data-file name prefixes: after a
+    # compaction the data files carry the compaction run's names while
+    # their chunk rows still belong to the original append manifests
+    target_manifests = target.get("manifest_files")
+    if target_manifests is None:
+        raise ValueError(f"v{version} records no manifest listing")
     run_id = run_id or f"rollback-{_uuid.uuid4().hex[:8]}"
     retired_dir = os.path.join(tbl.path, f"_retired_{run_id}")
     retired_files = 0
@@ -209,30 +221,6 @@ def rollback_table(spark: SparkSession, table_path: str, version: int, *,
             src_dir = os.path.dirname(d)
             if not os.listdir(src_dir):
                 os.rmdir(src_dir)
-    # manifest retirement is decided from the TARGET snapshot's recorded
-    # manifest state, never inferred from data-file name prefixes: after a
-    # compaction the data files carry the compaction run's names while
-    # their chunk rows still belong to the original append manifests, so
-    # a prefix heuristic would retire live manifests and break the
-    # manifest<->data integrity diff. Snapshots that predate the
-    # manifest_files key (or were written by old code) fall back to the
-    # prefix heuristic, guarded: it is only sound while no compaction ever
-    # ran, so a recorded last_compaction makes the rollback refuse loudly.
-    target_manifests = target.get("manifest_files")
-    if target_manifests is None:
-        if target.get("last_compaction") or (tbl.snapshot() or {}).get("last_compaction"):
-            raise ValueError(
-                f"v{version} records no manifest listing and a compaction "
-                "exists in this table's history — rollback would corrupt "
-                "manifest<->data integrity; re-append or compact once to "
-                "record manifest state, then roll back"
-            )
-        visible_runs = {os.path.basename(p).rsplit("-", 1)[0] for p in visible}
-        target_manifests = [
-            f for f in tbl.manifest_file_listing()
-            if not (f.startswith("append-") and
-                    f[len("append-"):-len(".parquet")] not in visible_runs)
-        ]
     keep = set(target_manifests)
     for fname in tbl.manifest_file_listing():
         if fname not in keep:

@@ -367,8 +367,12 @@ def attach_rle_bmp(df: DataFrame) -> DataFrame:
         F.struct(F.col("n_bytes"), F.col("mime")).alias("meta"))
 
 
-def _decode_rle8(payload: bytes) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """One BI_RLE8 BMP payload -> (h, w) uint8 pixel array (top-down).
+    This is the one format a pure-numpy engine can honestly own:
+    anything entropy-coded (PNG/JPEG/audio/video) raises, since no media
+    library ships with the engine and pretending otherwise would be a
+    silent wrong-pixels bug waiting to happen.
 
     The scan is per-RUN Python (the escape grammar is inherently
     sequential: absolute mode consumes a variable, padded span), but
@@ -435,15 +439,6 @@ def _decode_rle8(payload: bytes) -> np.ndarray:
     return np.flipud(np.stack(rows))  # bottom-up storage -> top-down
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    """Pixel decode for the formats a pure-numpy engine can honestly
-    own: 8-bpp BI_RLE8 BMP -> (h, w) uint8 array. Anything entropy-coded
-    (PNG/JPEG/audio/video) still raises — no media library ships in this
-    environment, and pretending otherwise would be a silent wrong-pixels
-    bug waiting to happen."""
-    return _decode_rle8(payload)
-
-
 def decode_rle_frames(assets: DataFrame) -> DataFrame:
     """Arrow-batched BI_RLE8 decode over the payload column: parses +
     decompresses every payload and emits an order-sensitive pixel
@@ -454,7 +449,7 @@ def decode_rle_frames(assets: DataFrame) -> DataFrame:
         for pdf in batches:
             out_w, out_h, npx, cks = [], [], [], []
             for payload in pdf["payload"]:
-                img = _decode_rle8(payload)
+                img = decode_image(payload)
                 h, w = img.shape
                 out_w.append(w); out_h.append(h); npx.append(w * h)
                 weights = np.arange(1, w * h + 1, dtype=np.int64)

@@ -57,8 +57,7 @@ def roundtrip_ok(original: DataFrame, decoded: DataFrame) -> bool:
     -> ~2 s on the 35M-token bench corpus). A false pass would need two
     DIFFERENT rows whose both xxhash64 halves collide between the two
     tables (P ~ n^2 / 2^128 — at 10^12 rows still ~3e-15); the exact
-    row-by-row path remains available as roundtrip_mismatches, which
-    verify_table uses for per-source attribution.
+    row-by-row path remains available as roundtrip_mismatches.
 
     The multiset compare is per-digest counts full-outer-joined (count
     mismatch or a one-sided digest = not equal) rather than a symmetric
@@ -99,48 +98,6 @@ def parquet_reference_bytes(df: DataFrame, scratch_dir: str,
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
     return total
-
-
-def verify_table(spark: SparkSession, table_path: str, original: DataFrame,
-                 run_id: str | None = None) -> dict:
-    """Round-trip verification recorded as 'verify'-stage lineage rows
-    (per source), completing the plan -> encode -> verify provenance chain
-    (SURVEY.md V1)."""
-    import time
-    import uuid
-
-    from eggopress import decode, lineage
-
-    t0 = time.time()
-    run_id = run_id or uuid.uuid4().hex[:12]
-    tbl = Table(table_path)
-    decoded = decode.decode_table(spark, table_path)
-    mism = roundtrip_mismatches(original, decoded)
-    per_source = {
-        r["source"]: r["n"]
-        for r in mism.groupBy(F.coalesce("o_source", "d_source").alias("source"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    counts = {r["source"]: r["n"] for r in
-              original.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    # cardinality check: a duplicated decoded row joins clean and would
-    # otherwise pass — per-source decoded counts must equal the original's
-    dec_counts = {r["source"]: r["n"] for r in
-                  decoded.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    wall_ms = int((time.time() - t0) * 1000)
-    rows = [
-        (run_id, f"source={s}", "verify",
-         "done" if per_source.get(s, 0) == 0 and dec_counts.get(s, 0) == n else "failed",
-         1, None, None, None, int(n), wall_ms)
-        for s, n in sorted(counts.items())
-    ]
-    lineage.append(spark, tbl, rows)
-    total_mismatch = sum(per_source.values())
-    count_ok = dec_counts == counts
-    return {"run_id": run_id, "mismatches": int(total_mismatch),
-            "roundtrip_ok": total_mismatch == 0 and count_ok,
-            "counts_match": count_ok, "sources": len(counts)}
 
 
 def compression_report(spark: SparkSession, table_path: str,

@@ -1,19 +1,25 @@
 """Every function in eggopress/ has a caller outside its own body, counted
-over eggopress/, __spark_entry__.py and the bench scripts (tests do not
-count), and no module defines the same function twice."""
+over eggopress/, __spark_entry__.py and the bench scripts and perfbench/
+(tests do not count), and no module defines the same function twice.
+
+A reference is a real use in code: a Name, an Attribute or an imported
+name (f-string expressions included). Docstrings and comments are not
+code, so a function mentioned only there counts as unreferenced."""
 
 import ast
 import os
-import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "eggopress")
 CALLERS = ("__spark_entry__.py", "bench.py", "bench_extra.py")
+BENCH = os.path.join(ROOT, "perfbench")
 
 # function -> why it may have no production caller
 EXCEPTIONS = {
     "codec_report": "the per-column codec-mix surface ROADMAP item 5 "
                     "builds on (describe --codecs)",
+    "stream_stats": "the watermarked windowed per-source arrival rollup "
+                    "(COVERAGE 'streaming stats' row)",
 }
 
 
@@ -22,6 +28,9 @@ def _sources() -> dict[str, str]:
              for f in fs if f.endswith(".py")]
     files += [os.path.join(ROOT, f) for f in CALLERS
               if os.path.exists(os.path.join(ROOT, f))]
+    if os.path.isdir(BENCH):
+        files += [os.path.join(BENCH, f) for f in sorted(os.listdir(BENCH))
+                  if f.endswith(".py")]
     return {f: open(f).read() for f in files}
 
 
@@ -40,18 +49,26 @@ def _definitions(sources: dict[str, str]):
                         yield f, m.name, m.lineno, m.end_lineno
 
 
+def _references(tree: ast.AST):
+    """(name, line) of every Name, Attribute and imported name in tree."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1], node.lineno
+
+
 def _unreferenced() -> dict[str, str]:
-    """name -> location of each function whose name appears nowhere
-    outside its own definition."""
+    """name -> location of each function with no reference outside its
+    own definition."""
     sources = _sources()
-    lines = {f: text.splitlines() for f, text in sources.items()}
+    refs = {f: list(_references(ast.parse(text))) for f, text in sources.items()}
     out = {}
     for f, name, first, last in _definitions(sources):
-        word = re.compile(rf"\b{re.escape(name)}\b")
-        if not any(word.search(line)
-                   for g, ls in lines.items()
-                   for i, line in enumerate(ls, 1)
-                   if not (g == f and first <= i <= last)):
+        if not any(ref == name and not (g == f and first <= line <= last)
+                   for g, rs in refs.items() for ref, line in rs):
             out[name] = f"{os.path.relpath(f, ROOT)}:{first}"
     return out
 

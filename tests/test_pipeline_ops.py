@@ -245,19 +245,19 @@ def test_rle8_decoder_mixed_modes_and_errors():
     # one row, w=8: run(3 x 7), absolute [9, 8, 6] (3 literals + pad),
     # run(2 x 5) -> [7 7 7 9 8 6 5 5]
     row = b"\x03\x07" + b"\x00\x03\x09\x08\x06\x00" + b"\x02\x05" + b"\x00\x00"
-    img = mm._decode_rle8(_rle_payload(8, 1, [row]))
+    img = mm.decode_image(_rle_payload(8, 1, [row]))
     assert img.tolist() == [[7, 7, 7, 9, 8, 6, 5, 5]]
 
     # two rows stored bottom-up flip to top-down
     r0 = b"\x04\x01\x00\x00"  # stored first = bottom row, value 1
     r1 = b"\x04\x02\x00\x00"  # stored second = top row, value 2
-    img2 = mm._decode_rle8(_rle_payload(4, 2, [r0, r1]))
+    img2 = mm.decode_image(_rle_payload(4, 2, [r0, r1]))
     assert img2.tolist() == [[2, 2, 2, 2], [1, 1, 1, 1]]
 
     with pytest.raises(NotImplementedError, match="delta"):
-        mm._decode_rle8(_rle_payload(4, 1, [b"\x00\x02\x01\x01\x04\x01\x00\x00"]))
+        mm.decode_image(_rle_payload(4, 1, [b"\x00\x02\x01\x01\x04\x01\x00\x00"]))
     with pytest.raises(ValueError, match="row length"):
-        mm._decode_rle8(_rle_payload(5, 1, [b"\x04\x01\x00\x00"]))
+        mm.decode_image(_rle_payload(5, 1, [b"\x04\x01\x00\x00"]))
     assert np.issubdtype(img.dtype, np.uint8)
 
 

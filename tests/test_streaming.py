@@ -692,6 +692,43 @@ def test_rollback_after_compaction_keeps_manifests(spark, tmp_path):
     assert decode.seen_doc_ids(spark, table).count() == 120
 
 
+def test_refused_rollback_moves_nothing(spark, tmp_path):
+    """A rollback the target snapshot cannot support is refused before
+    any file moves: the table keeps every file and decodes every row."""
+    import json as _json
+    import os
+
+    from eggopress import maintenance, synth
+
+    table = str(tmp_path / "refuse_tbl")
+    for seed in (1, 2):
+        encode.encode_append(spark, synth.corpus_df(spark, 200, seed=seed),
+                             table, run_id=f"run{seed}")
+    maintenance.compact_table(spark, table)
+    tbl = Table(table)
+    target = tbl.current_version()
+    encode.encode_append(spark, synth.corpus_df(spark, 200, seed=3), table,
+                         run_id="run3")
+    # a target snapshot without its manifest listing cannot be restored
+    meta = os.path.join(tbl.meta_dir, f"v{target}.metadata.json")
+    with open(meta) as f:
+        snap = _json.load(f)
+    del snap["manifest_files"]
+    with open(meta, "w") as f:
+        _json.dump(snap, f)
+
+    def listing():
+        return sorted(os.path.relpath(os.path.join(d, f), table)
+                      for d, _, fs in os.walk(table) for f in fs)
+
+    assert decode.decode_table(spark, table).count() == 600
+    before = listing()
+    with pytest.raises(ValueError, match="manifest listing"):
+        maintenance.rollback_table(spark, table, target)
+    assert listing() == before
+    assert decode.decode_table(spark, table).count() == 600
+
+
 def test_append_chunk_ids_unique_across_many_stream_batches(spark):
     """The stream chunk-id namespace is the batch id itself — consecutive
     batches can never collide (the md5-hash namespace collided with ~50%

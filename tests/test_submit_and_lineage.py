@@ -1,13 +1,10 @@
 """spark-submit --py-files launch test (the north rule's mandated launch
-mode) + verify-stage lineage."""
+mode)."""
 
 import json
 import os
 import subprocess
 import zipfile
-
-import pytest
-from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -79,21 +76,3 @@ spark.stop()
     # the plan's knobs actually reached the session
     assert res["shuffle_partitions"] == str(plan["spark.sql.shuffle.partitions"])
     assert res["speculation"] == "false"
-
-
-def test_verify_stage_lineage(spark, tmp_path):
-    from eggopress import encode, lineage, synth, verify
-    from eggopress.tablefmt import Table
-
-    path = str(tmp_path / "tbl")
-    corpus = synth.corpus_df(spark, 1000)
-    corpus.cache().count()
-    encode.encode_table(spark, corpus, path, n_partitions=4)
-    report = verify.verify_table(spark, path, corpus)
-    assert report["roundtrip_ok"] and report["mismatches"] == 0
-
-    lin = lineage.read(spark, Table(path))
-    stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
-    assert stages == {"encode", "verify"}
-    vrows = lin.filter(F.col("stage") == "verify").collect()
-    assert vrows and all(r["status"] == "done" for r in vrows)
