@@ -33,7 +33,7 @@ import pyarrow as pa
 from pyspark.sql import types as T
 
 from eggopress.codecs import core as codecs
-from eggopress.schema import CHUNK_ARROW_SCHEMA, CORPUS_ARROW_SCHEMA
+from eggopress.schema import CORPUS_ARROW_SCHEMA
 
 _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
@@ -245,13 +245,6 @@ def encode_batch(batch: pa.RecordBatch, partition_id: str, source: str,
         row[f"{c}_bytes"] = len(blobs[c])
         row[f"{c}_codec"] = codecs.codec_of(blobs[c])
     return row
-
-
-def chunk_rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
-    arrays = []
-    for field in CHUNK_ARROW_SCHEMA:
-        arrays.append(pa.array([r[field.name] for r in rows], type=field.type))
-    return pa.RecordBatch.from_arrays(arrays, schema=CHUNK_ARROW_SCHEMA)
 
 
 # which encoded streams each corpus column needs at decode time; tokens

@@ -5,17 +5,17 @@ steps: plan -> stage -> manifest -> promote -> lineage -> commit.
   partition count follows from them and `plan_salts` splits it across
   sources by row share (the skew policy).
 - stage (`_stage`): salt, repartitionByRange on (source, salt), sort,
-  encode chunks under mapInArrow and write the source=/salt= staging dir
-  (`_write_staged`, reused by compaction), recording every failed
-  attempt as a 'failed' lineage row.
-- then the manifest rows, the atomic promote into data/, one lineage row
-  per planned partition (`_lineage_rows`) and the 'encoded' snapshot.
+  then ONE mapInArrow job whose tasks encode the chunks, write their
+  files to staging (`_write_chunks`, which compaction uses too) and
+  return a small stats row per chunk to one collect.
+- then, from those rows: the manifest, the promote of exactly the listed
+  files, one lineage row per planned partition and the snapshot.
 
 `encode_table` (batch: resumable, retried, optionally in waves) and
 `encode_append` (one streaming micro-batch, replayed whole or not at
 all) differ only where an append means something else: its manifest is
-one deterministic append-<run_id>.parquet that a replay overwrites; its
-promote merges files into the partition dirs instead of replacing them;
+one append-<run_id>.parquet (a batch: <run_id>-w<wave>.parquet) that a
+replay overwrites; its promote merges files into the partition dirs;
 its chunk ids are namespaced per run; and it writes doc_id / signature
 sidecars before its lineage rows.
 
@@ -29,19 +29,22 @@ per-stage Parquet materialization becomes the lineage checkpoint table.
 from __future__ import annotations
 
 import math
+import os
 import re
 import time
 import uuid
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from eggopress import chunk as chunklib
 from eggopress import conf, lineage as lineagelib
-from eggopress.schema import (CHUNK_SCHEMA, CORPUS_ARROW_SCHEMA, CORPUS_FORMAT,
-                              MANIFEST_SCHEMA)
+from eggopress.schema import (CHUNK_ARROW_SCHEMA, CORPUS_ARROW_SCHEMA,
+                              CORPUS_FORMAT, MANIFEST_SCHEMA, STAGED_SCHEMA)
 from eggopress.tablefmt import Table
 
 
@@ -111,12 +114,59 @@ def _salt_expr(salts: dict[str, int]):
     )
 
 
-def _encode_fn(fail_partitions: frozenset[str],
+# Spark's partition-directory escaping (ExternalCatalogUtils): task-side
+# writes lay out source=<s> dirs as Spark's partitionBy writer did
+_PATH_ESCAPE = re.compile(r'[\x00-\x1f"#%\'*/:=?\\\x7f{\[\]^]')
+# chunk-file columns: source and salt live in the directory names
+_FILE_SCHEMA = pa.schema([f for f in CHUNK_ARROW_SCHEMA
+                          if f.name not in ("source", "salt")])
+_STAT_COLS = [n for n in _FILE_SCHEMA.names if not n.endswith("_blob")]
+_STAGED_ARROW_SCHEMA = to_arrow_schema(STAGED_SCHEMA)
+
+
+def _write_chunks(staging: str, chunk_batches):
+    """The task-side chunk-file writer of encode, append and compaction:
+    each chunk row (CHUNK_SCHEMA columns) becomes a row group of its
+    partition dir's staging file, named by task, stage and attempt so no
+    attempt overwrites another's; yields one STAGED_SCHEMA row per chunk."""
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    name = f"part-{tc.partitionId():05d}-s{tc.stageId()}-a{tc.attemptNumber()}.parquet"
+    writers: dict[str, pq.ParquetWriter] = {}
+    try:
+        for chunks in chunk_batches:
+            files = []
+            for i in range(chunks.num_rows):
+                chunk = chunks.slice(i, 1)
+                source = _PATH_ESCAPE.sub(lambda m: f"%{ord(m.group()):02X}",
+                                          str(chunk["source"][0].as_py()))
+                rel = f"source={source}/salt={chunk['salt'][0].as_py()}/{name}"
+                if rel not in writers:
+                    os.makedirs(os.path.dirname(os.path.join(staging, rel)), exist_ok=True)
+                    # Spark's zstd level; no dictionary and no footer
+                    # min/max copies for the blobs, statistics kept on the
+                    # stats columns so predicates still prune row groups
+                    writers[rel] = pq.ParquetWriter(
+                        os.path.join(staging, rel), _FILE_SCHEMA,
+                        compression=conf.DATA_CODEC, compression_level=3,
+                        use_dictionary=_STAT_COLS, write_statistics=_STAT_COLS,
+                        store_schema=False)
+                writers[rel].write_batch(chunk.select(_FILE_SCHEMA.names).cast(_FILE_SCHEMA))
+                files.append(rel)
+            yield chunks.select(STAGED_SCHEMA.names[:-1]).append_column(
+                "file", pa.array(files, pa.string())).cast(_STAGED_ARROW_SCHEMA)
+    finally:
+        for w in writers.values():
+            w.close()
+
+
+def _encode_fn(staging: str, fail_partitions: frozenset[str],
                fail_until_attempt: dict[str, int],
                attempts: dict[str, int],
                chunk_base: int, task_shift: int):
     """mapInArrow worker: split each sorted batch at (source,salt) group
-    boundaries, encode each slice as one chunk.
+    boundaries, encode each slice as one chunk, write it (_write_chunks).
 
     fail_partitions always fail (resume tests); fail_until_attempt[pid]=k
     fails while the current attempt number is <= k (auto-retry tests).
@@ -129,7 +179,7 @@ def _encode_fn(fail_partitions: frozenset[str],
     corrupt the (partition_id, chunk_id, column) manifest key.
     """
 
-    def fn(batches):
+    def encode(batches):
         from pyspark import TaskContext
 
         tc = TaskContext.get()
@@ -175,46 +225,20 @@ def _encode_fn(fail_partitions: frozenset[str],
                     )
                 )
                 seq += 1
-            yield chunklib.chunk_rows_to_batch(rows)
+            yield pa.RecordBatch.from_pylist(rows, schema=CHUNK_ARROW_SCHEMA)
+
+    def fn(batches):
+        return _write_chunks(staging, encode(batches))
 
     return fn
 
 
-# per-column-chunk manifest rows derived from staged chunk rows (blob
-# columns never referenced -> the parquet scan prunes them)
-_MANIFEST_STACK = [
-    "partition_id", "chunk_id",
-    "stack(4, 'doc_id', doc_id_codec, doc_id_bytes, "
-    "'source', source_codec, source_bytes, "
-    "'n_tok', n_tok_codec, n_tok_bytes, "
-    "'tokens', tokens_codec, tokens_bytes) as (column, codec, encoded_bytes)",
-    "n_rows", "n_values", "raw_bytes",
-    "n_tok_min", "n_tok_max", "tok_min", "tok_max",
-]
-
-
-def _chunk_stats(staged: DataFrame) -> list:
-    """Per-partition rollup of staged chunk rows (stats columns only)."""
-    return (
-        staged.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("chunks"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_values").alias("values"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-            F.concat_ws(
-                ",", F.array_distinct(F.collect_list("tokens_codec"))
-            ).alias("codecs"),
-        )
-        .collect()
-    )
-
-
-def _totals(stats: list) -> dict:
-    """Summary/snapshot totals of a list of _chunk_stats rows."""
-    return {k: sum(int(r[k]) for r in stats)
-            for k in ("chunks", "rows", "values", "raw_bytes", "encoded_bytes")}
+def _totals(chunks: list[dict]) -> dict:
+    """Summary/snapshot totals of staged chunk rows."""
+    return {"chunks": len(chunks),
+            **{k: sum(c[f] for c in chunks) for k, f in (
+                ("rows", "n_rows"), ("values", "n_values"),
+                ("raw_bytes", "raw_bytes"), ("encoded_bytes", "encoded_bytes"))}}
 
 
 def _phase_clock():
@@ -258,42 +282,31 @@ def _plan(df: DataFrame, n_partitions: int | None) -> tuple[dict, dict]:
     return plan_salts(counts, n_partitions), counts
 
 
-def _write_staged(chunks: DataFrame, staging: str) -> None:
-    """The source=/salt= staging write every corpus writer promotes from
-    (encode, append, compaction)."""
-    (
-        chunks.write.partitionBy("source", "salt")
-        .option("compression", conf.DATA_CODEC)
-        .mode("overwrite")
-        .parquet(staging)
-    )
-
-
 def _stage(spark: SparkSession, tbl: Table, salted: DataFrame,
            pids: list[str], run_id: str, *, cluster: bool, t0: float,
            mark, attempts: dict[str, int], retries: int = 0,
            fail_partitions: frozenset[str] = frozenset(),
            fail_until_attempt: dict[str, int] | None = None,
-           chunk_ids: tuple[int, int] = (0, 32), wave_idx: int = 0):
+           chunk_ids: tuple[int, int] = (0, 32), wave_idx: int = 0) -> list[dict]:
     """Encode the salted rows of `pids` into the run's staging dir.
 
     Range-partitions on (source, salt), sorts within partitions, encodes
-    under mapInArrow and writes the staging dir, re-running the write up
-    to `retries` times. Every failed attempt is recorded as a 'failed'
-    lineage row and counted in `attempts`. Returns (staged chunk rows,
-    per-partition stats)."""
+    and writes the chunk files under mapInArrow and collects their
+    STAGED_SCHEMA rows (as dicts, returned), re-running the job up to
+    `retries` times. Every failed attempt is recorded as a 'failed'
+    lineage row and counted in `attempts`."""
     arranged = salted.repartitionByRange(
         max(len(pids), 1), "source", "salt"
     ).sortWithinPartitions(*_sort_keys(cluster))
     staging = tbl.staging_dir(run_id)
     for try_no in range(max(0, retries) + 1):
         enc = arranged.mapInArrow(
-            _encode_fn(fail_partitions, fail_until_attempt or {},
+            _encode_fn(staging, fail_partitions, fail_until_attempt or {},
                        dict(attempts), *chunk_ids),
-            CHUNK_SCHEMA,
+            STAGED_SCHEMA,
         )
         try:
-            _write_staged(enc, staging)
+            chunks = enc.collect()
             mark("encode_write")
             break
         except Exception as exc:
@@ -314,32 +327,25 @@ def _stage(spark: SparkSession, tbl: Table, salted: DataFrame,
                 attempts[pid] = attempts.get(pid, 0) + 1
             if try_no >= max(0, retries):
                 raise
-    staged = spark.read.parquet(staging)
-    return staged, _chunk_stats(staged)
+    return [r.asDict() for r in chunks]
 
 
-def _lineage_rows(run_id: str, stats: list, pids: list[str],
-                  promoted: list[str], attempts: dict[str, int],
-                  t0: float) -> list[tuple]:
-    """One encode lineage row per planned partition: 'done' once promoted
-    ('staged' otherwise); planned-but-empty partitions count as done
-    (nothing to write)."""
+def _lineage_rows(run_id: str, chunks: list[dict], pids: list[str],
+                  attempts: dict[str, int], t0: float) -> list[tuple]:
+    """One 'done' encode lineage row per planned partition, once its files
+    are promoted; codec_summary is the sorted distinct token codecs.
+    Planned-but-empty partitions count as done (nothing to write)."""
     wall_ms = int((time.time() - t0) * 1000)
-    promoted = set(promoted)
-    rows = [
-        (run_id, r["partition_id"], "encode",
-         "done" if r["partition_id"] in promoted else "staged",
-         attempts.get(r["partition_id"], 0) + 1, r["codecs"],
-         int(r["raw_bytes"]), int(r["encoded_bytes"]), int(r["rows"]), wall_ms)
-        for r in stats
-    ]
-    staged_pids = {r["partition_id"] for r in stats}
-    rows += [
+    by_pid: dict[str, list[dict]] = {pid: [] for pid in pids}
+    for c in chunks:
+        by_pid[c["partition_id"]].append(c)
+    return [
         (run_id, pid, "encode", "done", attempts.get(pid, 0) + 1,
-         "", 0, 0, 0, wall_ms)
-        for pid in pids if pid not in staged_pids
+         ",".join(sorted({c["tokens_codec"] for c in cs})),
+         sum(c["raw_bytes"] for c in cs), sum(c["encoded_bytes"] for c in cs),
+         sum(c["n_rows"] for c in cs), wall_ms)
+        for pid, cs in by_pid.items()
     ]
-    return rows
 
 
 def encode_table(
@@ -418,30 +424,31 @@ def encode_table(
         salted = salted.filter(~pid.isin(sorted(done)))
 
     wave_groups = np.array_split(np.array(todo), max(1, waves))
-    all_stats: list = []
+    all_chunks: list[dict] = []
     attempts = lineagelib.attempt_counts(spark, tbl)
+    # a resume under the same run_id must not overwrite its manifests
+    first_wave = sum(f.startswith(f"{run_id}-w") for f in tbl.manifest_file_listing())
 
     for wave_idx, wave in enumerate(wave_groups):
         wave_pids = [str(p) for p in wave if p]
         if not wave_pids:
             continue
         wdf = salted.filter(pid.isin(wave_pids)) if len(wave_groups) > 1 else salted
-        staged, stats = _stage(
+        chunks = _stage(
             spark, tbl, wdf, wave_pids, run_id, cluster=cluster, t0=t0,
             mark=mark, attempts=attempts, retries=retries,
             fail_partitions=frozenset(fail_partitions),
             fail_until_attempt=fail_until_attempt, wave_idx=wave_idx)
-        # manifest from the staged (blob-free) stats columns
-        staged.selectExpr(*_MANIFEST_STACK).write.mode("append").parquet(tbl.manifest_dir)
+        _write_manifest_file(tbl, f"{run_id}-w{first_wave + wave_idx}", chunks)
         mark("stats_manifest")
 
-        promoted = tbl.promote_partitions(run_id)
+        tbl.promote_partitions(run_id, [c["file"] for c in chunks])
         lineagelib.append(spark, tbl, _lineage_rows(
-            run_id, stats, wave_pids, promoted, attempts, t0))
-        all_stats += stats
+            run_id, chunks, wave_pids, attempts, t0))
+        all_chunks += chunks
         mark("promote_lineage")
 
-    totals = _totals(all_stats)
+    totals = _totals(all_chunks)
     final_version = tbl.commit_snapshot(
         {
             "stage": "encoded",
@@ -491,7 +498,7 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
     tbl = Table(table_path)
     t0 = time.time()
     phases, mark = _phase_clock()
-    if _run_recorded(spark, tbl, run_id):
+    if _run_recorded(tbl, run_id):
         return {"run_id": run_id, "partitions": 0, "skipped": 1,
                 "wall_s": 0.0, "replayed": True, **_totals([])}
 
@@ -501,24 +508,19 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
                 "wall_s": 0.0, **_totals([])}
     pids = partition_ids(salts)
     mark("plan")
-    staged, stats = _stage(
+    chunks = _stage(
         spark, tbl, df.withColumn("salt", _salt_expr(salts)), pids, run_id,
         cluster=cluster, t0=t0, mark=mark, attempts={},
         chunk_ids=_append_chunk_base(run_id))
     # idempotent manifest: one deterministic file per batch
-    # (manifest/append-<run_id>.parquet, atomic os.replace), written
-    # driver-side — an at-least-once redelivery overwrites instead of
-    # appending a second copy of the stats. O(chunks x 4) rows per
-    # micro-batch, bounded by the batch size.
-    man_rows = sorted(
-        staged.selectExpr(*_MANIFEST_STACK).collect(),
-        key=lambda r: (r["partition_id"], r["chunk_id"], r["column"]),
-    )
-    _write_manifest_file(tbl, f"append-{run_id}", man_rows)
+    # (manifest/append-<run_id>.parquet, atomic os.replace) — an
+    # at-least-once redelivery overwrites instead of appending a second
+    # copy of the stats
+    _write_manifest_file(tbl, f"append-{run_id}", chunks)
     mark("stats_manifest")
     # deterministic <run_id>-<i>.parquet names make the merge-promote
     # itself replay-safe (identical re-encode overwrites, never duplicates)
-    promoted = tbl.promote_partitions(run_id, merge=True)
+    tbl.promote_partitions(run_id, [c["file"] for c in chunks], merge=True)
 
     # sidecars, written BEFORE the lineage rows so any batch the replay
     # skip can see has them, mode=overwrite so a redelivery is idempotent:
@@ -532,20 +534,17 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
         signatures.select("doc_id", "simhash").write.mode(
             "overwrite").parquet(tbl.sig_sidecar_dir(run_id))
 
-    lineagelib.append(spark, tbl, _lineage_rows(
-        run_id, stats, pids, promoted, {}, t0))
+    lineagelib.append(spark, tbl, _lineage_rows(run_id, chunks, pids, {}, t0))
     mark("promote_lineage")
     # snapshot totals recomputed from the duplicate-free manifest instead
     # of accumulated from the previous snapshot — correct under ANY retry
-    # interleaving (a replayed batch can never double-count)
-    # (one pass: chunk-level counts from the tokens rows, bytes from all)
-    tok = F.col("column") == "tokens"
-    tot = spark.read.parquet(tbl.manifest_dir).agg(
-        F.count(F.when(tok, 1)).alias("chunks"),
-        *[F.sum(F.when(tok, F.col(c))).alias(a) for c, a in
-          (("n_rows", "rows"), ("n_values", "values"), ("raw_bytes", "raw_bytes"))],
-        F.sum("encoded_bytes").alias("encoded_bytes"),
-    ).first()
+    # interleaving (a replayed batch can never double-count); read on the
+    # driver: chunk-level counts from the tokens rows, bytes from all rows
+    man = pq.read_table(tbl.manifest_dir)
+    tok = man.filter(pc.equal(man["column"], "tokens"))
+    totals = {"chunks": tok.num_rows, **{k: pc.sum(t[c]).as_py() or 0 for k, c, t in (
+        ("rows", "n_rows", tok), ("values", "n_values", tok),
+        ("raw_bytes", "raw_bytes", tok), ("encoded_bytes", "encoded_bytes", man))}}
     prev_snap = tbl.snapshot() or {}
     prev_runs = list(prev_snap.get("runs") or [])
     # coverage marker for the sidecar-based seen_doc_ids fast path: True
@@ -583,30 +582,28 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
         "partitions": tbl.partition_dirs(),
         "files": tbl.partition_file_listing(),
         "manifest_files": tbl.manifest_file_listing(),
-        "totals": {k: int(v) for k, v in tot.asDict().items()},
+        "totals": totals,
     })
     mark("commit")
     return {"run_id": run_id, "phase_sec": phases, "partitions": len(pids),
-            "skipped": 0, "wall_s": time.time() - t0, **_totals(stats)}
+            "skipped": 0, "wall_s": time.time() - t0, **_totals(chunks)}
 
 
-def _write_manifest_file(tbl: Table, name: str, rows: list) -> None:
-    """One manifest parquet file with a caller-chosen (deterministic) name,
-    written driver-side and swapped in atomically."""
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    # collected Rows carry stack() column order; re-map by field name
-    table = pa.table({f.name: pa.array([r[f.name] for r in rows], type=f.type)
-                      for f in to_arrow_schema(MANIFEST_SCHEMA)})
-    _os.makedirs(tbl.manifest_dir, exist_ok=True)
-    final = _os.path.join(tbl.manifest_dir, f"{name}.parquet")
+def _write_manifest_file(tbl: Table, name: str, chunks: list[dict]) -> None:
+    """The manifest rows of staged chunk rows (one per column chunk, sorted
+    by partition_id, chunk_id, column) as one parquet file with a
+    caller-chosen (deterministic) name, swapped in atomically."""
+    rows = sorted(({**c, "column": col, "codec": c[f"{col}_codec"],
+                    "encoded_bytes": c[f"{col}_bytes"]}
+                   for c in chunks for col in chunklib.COLUMNS),
+                  key=lambda r: (r["partition_id"], r["chunk_id"], r["column"]))
+    os.makedirs(tbl.manifest_dir, exist_ok=True)
+    final = os.path.join(tbl.manifest_dir, f"{name}.parquet")
     # tmp lives OUTSIDE the manifest dir: a crash must never leave a
     # half-written file where spark.read.parquet(manifest_dir) would trip
-    tmp = _os.path.join(tbl.path, f"_manifest_tmp_{name}.parquet")
-    pq.write_table(table, tmp)
-    _os.replace(tmp, final)
+    tmp = os.path.join(tbl.path, f"_manifest_tmp_{name}.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, to_arrow_schema(MANIFEST_SCHEMA)), tmp)
+    os.replace(tmp, final)
 
 
 def _append_chunk_base(run_id: str) -> tuple[int, int]:
@@ -632,21 +629,17 @@ def _append_chunk_base(run_id: str) -> tuple[int, int]:
     return ns << 48, 32
 
 
-def _run_recorded(spark: SparkSession, tbl: Table, run_id: str) -> bool:
+def _run_recorded(tbl: Table, run_id: str) -> bool:
     """Has this append run already committed (the exactly-once replay
-    check)? Fast path: the snapshot's cumulative run set — O(1), no Spark
-    job, no growth with stream lifetime. Slow path (run absent from the
-    snapshot): the lineage table, filtered to this run_id — covers the
-    crash window where the lineage wave landed but the snapshot commit
-    didn't."""
+    check)? Fast path: the snapshot's cumulative run set — O(1), no growth
+    with stream lifetime. Slow path (run absent from the snapshot): the
+    lineage rows of this run_id — covers the crash window where the
+    lineage wave landed but the snapshot commit didn't. Neither runs a
+    Spark job."""
     if run_id in ((tbl.snapshot() or {}).get("runs") or []):
         return True
     # only a 'done' row commits a run: a recorded failure leaves the batch
     # to be replayed
-    return bool(
-        lineagelib.read(spark, tbl)
-        .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .limit(1).count()
-    )
+    return lineagelib.run_done(tbl, run_id)
 
 

@@ -60,6 +60,15 @@ def append(spark: SparkSession, tbl: Table, rows: list[tuple]) -> None:
     )
 
 
+def run_done(tbl: Table, run_id: str) -> bool:
+    """Does run_id have a 'done' row? Read with pyarrow, like append."""
+    import pyarrow.parquet as pq
+
+    return _exists(tbl) and pq.read_table(
+        tbl.lineage_dir, columns=["run_id"],
+        filters=[("run_id", "==", run_id), ("status", "==", "done")]).num_rows > 0
+
+
 def done_partitions(spark: SparkSession, tbl: Table, stage: str = "encode") -> list[str]:
     if not _exists(tbl):
         return []

@@ -10,8 +10,8 @@ Chunk rows are immutable and self-describing (codec + params ride in the
 blob header), so compaction never touches a codec: it is a pure
 file-level rewrite — read the fat partitions' chunk rows, one shuffle on
 the partition key so each source=/salt= dir is written by one task as one
-file, then the encoder's staged writer and atomic promote. Decoded
-bytes are identical before and after (tested with exceptAll both ways).
+file by the encoder's task-side chunk writer, then the atomic promote.
+Decoded bytes are identical before and after (tested with exceptAll both ways).
 """
 
 from __future__ import annotations
@@ -23,7 +23,8 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from eggopress import lineage as lineagelib
-from eggopress.encode import _write_staged
+from eggopress.encode import _write_chunks
+from eggopress.schema import STAGED_SCHEMA
 from eggopress.tablefmt import Table
 
 
@@ -325,8 +326,11 @@ def compact_table(spark: SparkSession, table_path: str, *,
     # basePath keeps the source=/salt= columns when reading partition
     # subdirs directly (only the fat partitions are rewritten or even read)
     chunks = spark.read.option("basePath", tbl.data_dir).parquet(*paths)
-    _write_staged(chunks.repartition("source", "salt"), tbl.staging_dir(run_id))
-    promoted = tbl.promote_partitions(run_id)  # replace semantics
+    staging = tbl.staging_dir(run_id)
+    staged = chunks.repartition("source", "salt").mapInArrow(
+        lambda batches: _write_chunks(staging, batches), STAGED_SCHEMA).collect()
+    promoted = tbl.promote_partitions(  # replace semantics
+        run_id, [r["file"] for r in staged])
     after = partition_file_counts(tbl)
     now_ms = int((time.time() - t0) * 1000)
     lineagelib.append(spark, tbl, [

@@ -59,6 +59,14 @@ CHUNK_SCHEMA = T.StructType(
 )
 CHUNK_ARROW_SCHEMA = to_arrow_schema(CHUNK_SCHEMA)
 
+# What a write task returns per chunk in place of its blobs: the stats
+# columns and the staged file (relative to the staging dir) holding it.
+STAGED_SCHEMA = T.StructType(
+    [f for f in CHUNK_SCHEMA
+     if f.name not in ("source", "salt") and not f.name.endswith("_blob")]
+    + [T.StructField("file", T.StringType(), False)]
+)
+
 # Manifest: per column-chunk stats (FIXTURES.md §3).
 MANIFEST_SCHEMA = T.StructType(
     [

@@ -109,7 +109,7 @@ def stream_ingest(spark: SparkSession, input_dir: str, table_path: str, *,
         df = batch_df.dropDuplicates(["doc_id"])
         tbl = Table(table_path)
         snap = tbl.snapshot()
-        replayed = snap is not None and encode._run_recorded(s, tbl, run_id)
+        replayed = snap is not None and encode._run_recorded(tbl, run_id)
         if dedup_across_batches and snap is not None and not replayed:
             seen = decode.seen_doc_ids(s, table_path, exclude_run=run_id)
             df = df.join(seen, "doc_id", "left_anti")

@@ -12,6 +12,8 @@ Layout:
     <table>/metadata/v<N>.metadata.json   snapshot: schema, plan, partitions
     <table>/metadata/version-hint.txt     current version (atomic os.replace)
     <table>/data/source=<s>/salt=<k>/     encoded chunk parquet files
+    <table>/_staging_<run_id>/source=<s>/salt=<k>/   task-written chunk
+        files, part-<task>-s<stage>-a<attempt>; only listed ones promote
     <table>/manifest/                     per-column-chunk stats parquet
     <table>/lineage/                      checkpoint rows parquet
 """
@@ -153,8 +155,11 @@ class Table:
     def staging_dir(self, run_id: str) -> str:
         return os.path.join(self.path, f"_staging_{run_id}")
 
-    def promote_partitions(self, run_id: str, merge: bool = False) -> list[str]:
-        """Move staged source=/salt= dirs into data/ (idempotent per dir).
+    def promote_partitions(self, run_id: str, files: list[str],
+                           merge: bool = False) -> list[str]:
+        """Move the listed staged chunk files (source=<s>/salt=<k>/<name>,
+        relative to the staging dir) into data/; anything else in staging
+        (files of failed or speculative task attempts) is deleted.
 
         merge=False (batch encode): overwrite-partition semantics — an
         existing destination dir is replaced wholesale.
@@ -170,32 +175,20 @@ class Table:
         Returns the promoted partition_ids ("source=<s>/salt=<k>").
         """
         staged = self.staging_dir(run_id)
-        promoted: list[str] = []
-        if not os.path.isdir(staged):
-            return promoted
-        for src_ent in sorted(os.listdir(staged)):
-            if not src_ent.startswith("source="):
-                continue
-            for salt_ent in sorted(os.listdir(os.path.join(staged, src_ent))):
-                if not salt_ent.startswith("salt="):
-                    continue
-                src = os.path.join(staged, src_ent, salt_ent)
-                dst = os.path.join(self.data_dir, src_ent, salt_ent)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                if merge:
-                    os.makedirs(dst, exist_ok=True)
-                    files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
-                    for i, f in enumerate(files):
-                        os.replace(os.path.join(src, f),
-                                   os.path.join(dst, f"{run_id}-{i:04d}.parquet"))
-                    shutil.rmtree(src, ignore_errors=True)
-                else:
-                    if os.path.exists(dst):
-                        shutil.rmtree(dst)  # overwrite-partition semantics
-                    os.replace(src, dst)
-                promoted.append(f"{src_ent}/{salt_ent}")
+        listed: dict[str, list[str]] = {}
+        for f in sorted(set(files)):
+            part, name = os.path.split(f)
+            listed.setdefault(part, []).append(name)
+        for part, names in sorted(listed.items()):
+            dst = os.path.join(self.data_dir, part)
+            if not merge and os.path.exists(dst):
+                shutil.rmtree(dst)  # overwrite-partition semantics
+            os.makedirs(dst, exist_ok=True)
+            for i, f in enumerate(names):
+                os.replace(os.path.join(staged, part, f), os.path.join(
+                    dst, f"{run_id}-{i:04d}.parquet" if merge else f))
         shutil.rmtree(staged, ignore_errors=True)
-        return promoted
+        return sorted(listed)
 
     def partition_file_listing(self) -> dict[str, list[str]]:
         """partition_id -> sorted chunk parquet file names, as currently on

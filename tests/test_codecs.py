@@ -124,6 +124,15 @@ def test_bit_lengths():
     np.testing.assert_array_equal(bitpack.bit_lengths(x), expected)
 
 
+def test_bit_lengths32_matches_int_bit_length():
+    # 0, 2**k (1 included) and 2**k - 1 (2**32 - 1 included), then random
+    edges = [0] + [2**k for k in range(32)] + [2**k - 1 for k in range(1, 33)]
+    rand = np.random.default_rng(5).integers(0, 2**32, 10**6, dtype=np.uint64)
+    x = np.concatenate([np.array(edges, dtype=np.uint64), rand]).astype(np.uint32)
+    expected = np.array([int(v).bit_length() for v in x], dtype=np.uint8)
+    np.testing.assert_array_equal(bitpack.bit_lengths32(x), expected)
+
+
 # ------------------------------------------------------------- strings
 
 def _mk_strs(strs):

@@ -2,13 +2,14 @@
 share the partition plan, the staged write and its failure recording."""
 
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from eggopress import decode, encode, ingest, lineage, verify
+from eggopress import decode, encode, ingest, lineage, maintenance, synth, verify
 from eggopress.pipeline import textstats
 from eggopress.schema import LINEAGE_SCHEMA, MANIFEST_SCHEMA
 from eggopress.tablefmt import Table
@@ -85,3 +86,130 @@ def test_lineage_and_append_manifest_files_match_schemas(spark, tmp_path):
         want = to_arrow_schema(struct)
         assert got.names == want.names
         assert got.types == want.types
+
+
+def _parquet_bytes(path):
+    return sum(os.path.getsize(os.path.join(r, f))
+               for r, _, fs in os.walk(path) for f in fs if f.endswith(".parquet"))
+
+
+def test_encode_table_job_count_and_codec_summary(spark, tmp_path):
+    """One encode runs at most 5 Spark jobs (the plan's groupBy, the range
+    sample, and the one encode-and-write job with its shuffle); its
+    lineage codec summaries are the sorted distinct token codecs, equal
+    across re-encodes."""
+    corpus = synth.corpus_df(spark, 1500, seed=3)
+    corpus.cache().count()
+    sc = spark.sparkContext
+    sc.setJobGroup("encode-job-count", "one encode_table")
+    try:
+        encode.encode_table(spark, corpus, str(tmp_path / "a"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("encode-job-count")) <= 5
+
+    encode.encode_table(spark, corpus, str(tmp_path / "b"))
+    summaries = []
+    for name in ("a", "b"):
+        rows = lineage.read(spark, Table(str(tmp_path / name))) \
+            .filter(F.col("status") == "done").collect()
+        summaries.append(sorted((r["partition_id"], r["codec_summary"]) for r in rows))
+    assert summaries[0] == summaries[1]
+    for _, codecs in summaries[0]:
+        assert codecs == ",".join(sorted(set(codecs.split(","))))
+    corpus.unpersist()
+
+
+def test_failed_attempt_files_are_never_promoted(spark, tmp_path, monkeypatch):
+    """A retried encode promotes only the files its successful job listed:
+    the files the healthy tasks of the failed attempt wrote, and a stray
+    file planted in staging, never reach data/."""
+    corpus = synth.corpus_df(spark, 1500, seed=4)
+    corpus.cache().count()
+    path = str(tmp_path / "retry_tbl")
+    counts = {r["source"]: r["count"] for r in corpus.groupBy("source").count().collect()}
+    pids = encode.partition_ids(encode.plan_salts(counts, 8))
+    # the last range partition fails: the tasks ahead of it finish (and
+    # write their files) before it runs
+    flaky = pids[-1]
+
+    seen = {}
+    promote = Table.promote_partitions
+
+    def plant_then_promote(self, run_id, files, merge=False):
+        staging = self.staging_dir(run_id)
+        shutil.copy(os.path.join(staging, files[0]),
+                    os.path.join(staging, os.path.dirname(files[0]), "stray.parquet"))
+        seen["staged"] = {os.path.relpath(os.path.join(r, f), staging)
+                          for r, _, fs in os.walk(staging) for f in fs}
+        seen["listed"] = set(files)
+        return promote(self, run_id, files, merge)
+
+    monkeypatch.setattr(Table, "promote_partitions", plant_then_promote)
+    encode.encode_table(spark, corpus, path, n_partitions=8, retries=1,
+                        fail_until_attempt={flaky: 1})
+    monkeypatch.undo()
+
+    unlisted = seen["staged"] - seen["listed"]
+    assert any(not f.endswith("stray.parquet") for f in unlisted), \
+        "the failed attempt's healthy tasks should have left files"
+    tbl = Table(path)
+    listing = tbl.partition_file_listing()
+    assert listing == tbl.snapshot()["files"]
+    assert sum(len(v) for v in listing.values()) == len(seen["listed"])
+    checks = maintenance.table_report(spark, path)["checks"]
+    assert checks["manifest_chunks_without_data"] == 0
+    assert checks["data_chunks_without_manifest"] == 0
+    assert verify.roundtrip_ok(corpus, decode.decode_table(spark, path))
+    lin = lineage.read(spark, tbl).collect()
+    assert {(r["partition_id"], r["attempt"]) for r in lin if r["status"] == "failed"} \
+        == {(flaky, 1)}
+    done = {r["partition_id"]: r["attempt"] for r in lin if r["status"] == "done"}
+    assert done == {p: 2 if p == flaky else 1 for p in pids}
+    corpus.unpersist()
+
+
+def test_resume_under_same_run_id_keeps_every_manifest(spark, tmp_path):
+    """Wave manifests are named <run_id>-w<wave>; a resume that reuses the
+    run_id adds manifest files instead of overwriting the first run's."""
+    corpus = synth.corpus_df(spark, 600, seed=6)
+    path = str(tmp_path / "same_run_tbl")
+    counts = {r["source"]: r["count"] for r in corpus.groupBy("source").count().collect()}
+    pids = encode.partition_ids(encode.plan_salts(counts, 4))
+    with pytest.raises(Exception, match="injected failure"):
+        encode.encode_table(spark, corpus, path, n_partitions=4, waves=len(pids),
+                            run_id="r1", fail_partitions=frozenset([pids[-1]]))
+    encode.encode_table(spark, corpus, path, resume=True, run_id="r1")
+    checks = maintenance.table_report(spark, path)["checks"]
+    assert checks["manifest_chunks_without_data"] == 0
+    assert checks["data_chunks_without_manifest"] == 0
+    assert len(Table(path).manifest_file_listing()) == len(pids)
+
+
+def test_chunk_files_no_larger_than_spark_writer(spark, tmp_path):
+    """The task-side pyarrow chunk files store the same chunk rows in no
+    more bytes than Spark's partitionBy zstd parquet writer did."""
+    path = str(tmp_path / "bytes_tbl")
+    encode.encode_table(spark, synth.corpus_df(spark, 3000, seed=901), path)
+    data_dir = Table(path).data_dir
+    spark_dir = str(tmp_path / "spark_written")
+    (spark.read.parquet(data_dir).write.partitionBy("source", "salt")
+     .option("compression", "zstd").mode("overwrite").parquet(spark_dir))
+    assert _parquet_bytes(data_dir) <= _parquet_bytes(spark_dir)
+
+
+def test_source_needing_path_escape(spark, tmp_path):
+    """A source with path characters lands in the dir Spark's partitionBy
+    writer would name, decodes exactly, and its partition is recorded as
+    done, so a resume does not re-encode it."""
+    table = str(tmp_path / "esc_tbl")
+    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    df = spark.createDataFrame(
+        [("d1", [1, 2, 3], 3, "we:b/x y%"), ("d2", [4, 5], 2, "plain")], schema)
+    encode.encode_table(spark, df, table)
+    tbl = Table(table)
+    assert tbl.partition_dirs() == ["source=plain/salt=0", "source=we%3Ab%2Fx y%25/salt=0"]
+    assert verify.roundtrip_ok(df, decode.decode_table(spark, table))
+    assert sorted(lineage.done_partitions(spark, tbl)) == [
+        "source=plain/salt=0", "source=we:b/x y%/salt=0"]
