@@ -25,6 +25,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _committed(path: str) -> bool:
+    """Does path hold a committed table (a cache hit)?"""
+    from eggopress.tablefmt import Table
+
+    return (Table(path).snapshot() or {}).get("stage") == "encoded"
+
+
 def _roundtrip_table(spark: SparkSession, sf_dir: str) -> str:
     """Encode the tokenized documents corpus once per sf_dir; cached on disk."""
     from eggopress import encode
@@ -32,9 +39,7 @@ def _roundtrip_table(spark: SparkSession, sf_dir: str) -> str:
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     path = os.path.join(SCRATCH, f"rt3_{key}")  # rt3: delta codec joined the candidate set
-    from eggopress.tablefmt import Table
-
-    if Table(path).snapshot() is None or (Table(path).snapshot() or {}).get("stage") != "encoded":
+    if not _committed(path):
         corpus = textstats.tokenize(_t(spark, sf_dir, "documents"))
         encode.encode_table(spark, corpus, path, n_partitions=8)
     return path
@@ -114,8 +119,8 @@ def _generic_lineitem_table(spark: SparkSession, sf_dir: str) -> str:
     from eggopress import generic
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(SCRATCH, f"gli3_{key}")  # gli3: delta codec joined the candidate set
-    if not os.path.exists(os.path.join(path, "_meta.json")):
+    path = os.path.join(SCRATCH, f"gli4_{key}")  # gli4: generic tables commit snapshots
+    if not _committed(path):
         li = _t(spark, sf_dir, "lineitem")
         generic.encode_generic(
             spark, li, path, cluster_by=("l_shipdate", "l_orderkey"),
@@ -172,8 +177,8 @@ def _q_events_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eggopress import generic
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(SCRATCH, f"gev3_{key}")
-    if not os.path.exists(os.path.join(path, "_meta.json")):
+    path = os.path.join(SCRATCH, f"gev4_{key}")
+    if not _committed(path):
         generic.encode_generic(
             spark, _t(spark, sf_dir, "events"), path,
             cluster_by=("event_type", "ts"), n_partitions=4)
@@ -199,8 +204,8 @@ def _q_embeddings_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eggopress import generic
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(SCRATCH, f"gemb3_{key}")
-    if not os.path.exists(os.path.join(path, "_meta.json")):
+    path = os.path.join(SCRATCH, f"gemb4_{key}")
+    if not _committed(path):
         generic.encode_generic(
             spark, _t(spark, sf_dir, "embeddings"), path,
             cluster_by=("label", "vec_id"), n_partitions=4)

@@ -39,12 +39,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from eggopress import chunk as chunklib
 from eggopress import conf, lineage as lineagelib
 from eggopress.schema import (CHUNK_ARROW_SCHEMA, CORPUS_ARROW_SCHEMA,
-                              CORPUS_FORMAT, MANIFEST_SCHEMA, STAGED_SCHEMA)
+                              CORPUS_FORMAT, MANIFEST_SCHEMA)
 from eggopress.tablefmt import Table
 
 
@@ -117,45 +117,63 @@ def _salt_expr(salts: dict[str, int]):
 # Spark's partition-directory escaping (ExternalCatalogUtils): task-side
 # writes lay out source=<s> dirs as Spark's partitionBy writer did
 _PATH_ESCAPE = re.compile(r'[\x00-\x1f"#%\'*/:=?\\\x7f{\[\]^]')
-# chunk-file columns: source and salt live in the directory names
-_FILE_SCHEMA = pa.schema([f for f in CHUNK_ARROW_SCHEMA
-                          if f.name not in ("source", "salt")])
-_STAT_COLS = [n for n in _FILE_SCHEMA.names if not n.endswith("_blob")]
-_STAGED_ARROW_SCHEMA = to_arrow_schema(STAGED_SCHEMA)
+_PART_COLS = ("source", "salt")  # corpus partition dirs, not stored in the files
+_FILE_SCHEMA = pa.schema([f for f in CHUNK_ARROW_SCHEMA if f.name not in _PART_COLS])
 
 
-def _write_chunks(staging: str, chunk_batches):
-    """The task-side chunk-file writer of encode, append and compaction:
-    each chunk row (CHUNK_SCHEMA columns) becomes a row group of its
-    partition dir's staging file, named by task, stage and attempt so no
-    attempt overwrites another's; yields one STAGED_SCHEMA row per chunk."""
+def _staged_schema(file_schema: pa.Schema) -> pa.Schema:
+    """A write task's row per chunk: its stats columns and staged file."""
+    return pa.schema([f for f in file_schema if not f.name.endswith("_blob")]
+                     + [pa.field("file", pa.string(), False)])
+
+
+_STAGED_SCHEMA = from_arrow_schema(_staged_schema(_FILE_SCHEMA))
+
+
+def _write_chunks(staging: str, chunk_batches, file_schema: pa.Schema,
+                  part_cols: tuple[str, ...] = (), row_group_bytes: int = 0):
+    """The task-side chunk-file writer of every table write: each chunk row
+    goes to its partition dir's staging file (<col>=<value>/ per part_cols;
+    the staging root if none), named by task, stage and attempt so no
+    attempt overwrites another's. A file closes a row group at
+    row_group_bytes of buffered chunks (the corpus's 0: one per chunk, so
+    footer min/max prune per chunk). Yields one _staged_schema row per chunk."""
     from pyspark import TaskContext
 
     tc = TaskContext.get()
     name = f"part-{tc.partitionId():05d}-s{tc.stageId()}-a{tc.attemptNumber()}.parquet"
+    staged_schema = _staged_schema(file_schema)
+    stat_cols = staged_schema.names[:-1]
     writers: dict[str, pq.ParquetWriter] = {}
+    pending: dict[str, list[pa.RecordBatch]] = {}
     try:
         for chunks in chunk_batches:
             files = []
             for i in range(chunks.num_rows):
                 chunk = chunks.slice(i, 1)
-                source = _PATH_ESCAPE.sub(lambda m: f"%{ord(m.group()):02X}",
-                                          str(chunk["source"][0].as_py()))
-                rel = f"source={source}/salt={chunk['salt'][0].as_py()}/{name}"
+                rel = os.path.join(*(
+                    f"{c}=" + _PATH_ESCAPE.sub(lambda m: f"%{ord(m.group()):02X}",
+                                               str(chunk[c][0].as_py()))
+                    for c in part_cols), name)
                 if rel not in writers:
                     os.makedirs(os.path.dirname(os.path.join(staging, rel)), exist_ok=True)
                     # Spark's zstd level; no dictionary and no footer
                     # min/max copies for the blobs, statistics kept on the
                     # stats columns so predicates still prune row groups
                     writers[rel] = pq.ParquetWriter(
-                        os.path.join(staging, rel), _FILE_SCHEMA,
+                        os.path.join(staging, rel), file_schema,
                         compression=conf.DATA_CODEC, compression_level=3,
-                        use_dictionary=_STAT_COLS, write_statistics=_STAT_COLS,
+                        use_dictionary=stat_cols, write_statistics=stat_cols,
                         store_schema=False)
-                writers[rel].write_batch(chunk.select(_FILE_SCHEMA.names).cast(_FILE_SCHEMA))
+                pending.setdefault(rel, []).append(
+                    chunk.select(file_schema.names).cast(file_schema))
+                if sum(b.nbytes for b in pending[rel]) >= row_group_bytes:
+                    writers[rel].write_table(pa.Table.from_batches(pending.pop(rel)))
                 files.append(rel)
-            yield chunks.select(STAGED_SCHEMA.names[:-1]).append_column(
-                "file", pa.array(files, pa.string())).cast(_STAGED_ARROW_SCHEMA)
+            yield chunks.select(stat_cols).append_column(
+                "file", pa.array(files, pa.string())).cast(staged_schema)
+        for rel, rows in pending.items():
+            writers[rel].write_table(pa.Table.from_batches(rows))
     finally:
         for w in writers.values():
             w.close()
@@ -227,18 +245,32 @@ def _encode_fn(staging: str, fail_partitions: frozenset[str],
                 seq += 1
             yield pa.RecordBatch.from_pylist(rows, schema=CHUNK_ARROW_SCHEMA)
 
-    def fn(batches):
-        return _write_chunks(staging, encode(batches))
-
-    return fn
+    return lambda batches: _write_chunks(staging, encode(batches), _FILE_SCHEMA, _PART_COLS)
 
 
 def _totals(chunks: list[dict]) -> dict:
-    """Summary/snapshot totals of staged chunk rows."""
+    """Summary totals of one run's staged chunk rows."""
     return {"chunks": len(chunks),
             **{k: sum(c[f] for c in chunks) for k, f in (
                 ("rows", "n_rows"), ("values", "n_values"),
                 ("raw_bytes", "raw_bytes"), ("encoded_bytes", "encoded_bytes"))}}
+
+
+def _table_state(tbl: Table) -> dict:
+    """The snapshot fields for what a corpus table holds on disk: format,
+    partitions, chunk and manifest files, and whole-table totals from the
+    duplicate-free manifest (so right after a resume or an append replay):
+    chunk-level counts from the tokens rows, bytes from all rows."""
+    man = pq.read_table(tbl.manifest_dir)
+    tok = man.filter(pc.equal(man["column"], "tokens"))
+    return {"schema": CORPUS_FORMAT, "partitions": tbl.partition_dirs(),
+            "files": tbl.partition_file_listing(),
+            "manifest_files": tbl.manifest_file_listing(),
+            "totals": {"chunks": tok.num_rows, **{
+                k: pc.sum(t[c]).as_py() or 0 for k, c, t in (
+                    ("rows", "n_rows", tok), ("values", "n_values", tok),
+                    ("raw_bytes", "raw_bytes", tok),
+                    ("encoded_bytes", "encoded_bytes", man))}}}
 
 
 def _phase_clock():
@@ -292,7 +324,7 @@ def _stage(spark: SparkSession, tbl: Table, salted: DataFrame,
 
     Range-partitions on (source, salt), sorts within partitions, encodes
     and writes the chunk files under mapInArrow and collects their
-    STAGED_SCHEMA rows (as dicts, returned), re-running the job up to
+    staged rows (as dicts, returned), re-running the job up to
     `retries` times. Every failed attempt is recorded as a 'failed'
     lineage row and counted in `attempts`."""
     arranged = salted.repartitionByRange(
@@ -303,7 +335,7 @@ def _stage(spark: SparkSession, tbl: Table, salted: DataFrame,
         enc = arranged.mapInArrow(
             _encode_fn(staging, fail_partitions, fail_until_attempt or {},
                        dict(attempts), *chunk_ids),
-            STAGED_SCHEMA,
+            _STAGED_SCHEMA,
         )
         try:
             chunks = enc.collect()
@@ -393,7 +425,7 @@ def encode_table(
         # data/manifest/lineage ASIDE (not delete) — if this encode dies,
         # the old contents are still recoverable; they are purged only
         # after the final 'encoded' snapshot commits below
-        tbl.retire_state(run_id)
+        tbl.retire_state(run_id, CORPUS_FORMAT)
 
     snap = tbl.snapshot()
     if resume and snap and "salts" in snap:
@@ -448,20 +480,9 @@ def encode_table(
         all_chunks += chunks
         mark("promote_lineage")
 
-    totals = _totals(all_chunks)
-    final_version = tbl.commit_snapshot(
-        {
-            "stage": "encoded",
-            "salts": salts,
-            "sources": sources,
-            "run_id": run_id,
-            "schema": CORPUS_FORMAT,
-            "partitions": tbl.partition_dirs(),
-            "files": tbl.partition_file_listing(),
-            "manifest_files": tbl.manifest_file_listing(),
-            "totals": totals,
-        }
-    )
+    final_version = tbl.commit_snapshot({
+        "stage": "encoded", "salts": salts, "sources": sources,
+        "run_id": run_id, **_table_state(tbl)})
     # the replacing table is now the committed truth — only NOW is it safe
     # to drop the previous table's retired contents
     tbl.purge_retired()
@@ -473,7 +494,7 @@ def encode_table(
         "partitions": len(todo),
         "skipped": len(done),
         "sources": sources,
-        **totals,
+        **_totals(all_chunks),
         "wall_s": time.time() - t0,
     }
 
@@ -536,15 +557,6 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
 
     lineagelib.append(spark, tbl, _lineage_rows(run_id, chunks, pids, {}, t0))
     mark("promote_lineage")
-    # snapshot totals recomputed from the duplicate-free manifest instead
-    # of accumulated from the previous snapshot — correct under ANY retry
-    # interleaving (a replayed batch can never double-count); read on the
-    # driver: chunk-level counts from the tokens rows, bytes from all rows
-    man = pq.read_table(tbl.manifest_dir)
-    tok = man.filter(pc.equal(man["column"], "tokens"))
-    totals = {"chunks": tok.num_rows, **{k: pc.sum(t[c]).as_py() or 0 for k, c, t in (
-        ("rows", "n_rows", tok), ("values", "n_values", tok),
-        ("raw_bytes", "raw_bytes", tok), ("encoded_bytes", "encoded_bytes", man))}}
     prev_snap = tbl.snapshot() or {}
     prev_runs = list(prev_snap.get("runs") or [])
     # coverage marker for the sidecar-based seen_doc_ids fast path: True
@@ -578,11 +590,7 @@ def encode_append(spark: SparkSession, df: DataFrame, table_path: str, *,
         "sig_runs": sorted(set(prev_sig_runs) | {run_id})
         if signatures is not None else prev_sig_runs,
         "sigs_cover_table": sigs_cover,
-        "schema": CORPUS_FORMAT,
-        "partitions": tbl.partition_dirs(),
-        "files": tbl.partition_file_listing(),
-        "manifest_files": tbl.manifest_file_listing(),
-        "totals": totals,
+        **_table_state(tbl),
     })
     mark("commit")
     return {"run_id": run_id, "phase_sec": phases, "partitions": len(pids),

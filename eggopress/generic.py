@@ -18,24 +18,24 @@ as its n_tok_blob and tokens_blob.
 Nulls are rejected loudly (ValueError) — the codec stack is dense-only,
 same contract as the corpus path.
 
-Layout: <path>/data/*.parquet holds one row per CHUNK (chunk_rows input
-rows batched by Arrow), with per-column `<c>__blob` / `<c>__codec`
-columns plus `<c>__min`/`<c>__max` int64 stats for integer-backed kinds
-(chunk skipping, same P2 discipline as the corpus engine);
-<path>/_meta.json records the original schema + per-column kind map the
-decoder rebuilds from. Scale shape: encode is a narrow mapInArrow over
-whatever partitioning the caller chose (cluster_by adds one
-repartitionByRange + in-partition sort, exactly the corpus engine's
-clustering trade); decode is a narrow mapInArrow over the chunk files
-with column pruning at the parquet scan (only requested `<c>__blob`
-streams are read) and min/max chunk skipping pushed down as scan
-filters.
+Layout: a tablefmt table whose <path>/data/*.parquet, written by the
+encode tasks with the corpus's chunk writer, hold one row per CHUNK
+(chunk_rows input rows batched by Arrow): per-column `<c>__blob` /
+`<c>__codec` plus `<c>__min`/`<c>__max`/`<c>__sum` int64 stats for
+integer-backed kinds (chunk skipping, as in the corpus engine); its
+GENERIC_FORMAT snapshot records the schema and kind map to decode by.
+Scale shape: encode is a narrow mapInArrow over whatever partitioning
+the caller chose (cluster_by adds one repartitionByRange + in-partition
+sort, exactly the corpus engine's clustering trade); decode is a narrow
+mapInArrow over the chunk files with column pruning at the parquet scan
+(only requested `<c>__blob` streams are read) and min/max chunk
+skipping pushed down as scan filters.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import uuid
 
 import pyarrow as pa
 
@@ -52,6 +52,15 @@ from eggopress.chunk import (
     _int_stats,
 )
 from eggopress.codecs import core as codecs
+from eggopress.encode import _staged_schema, _write_chunks
+from eggopress.schema import GENERIC_FORMAT
+from eggopress.tablefmt import Table
+
+# Generic chunk files close a row group at this many buffered bytes. An
+# 80-column row group costs ~8 KB of footer: a seed-11 generic_lineitem
+# encode (16 chunks, 8 files) took 1,865,846 B by Spark's writer,
+# 1,908,429 B at one row group per ~115 KB chunk, 1,776,560 B at one per file.
+ROW_GROUP_BYTES = 1 << 20
 
 
 def _frame2(a: bytes, b: bytes) -> bytes:
@@ -222,51 +231,52 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
                     raw += r
                     enc += len(blob)
                     if _KINDS[kinds[c]][0]:
-                        lo, hi, s = _int_stats(kinds[c], arr)
-                        cols[f"{c}__min"] = lo
-                        cols[f"{c}__max"] = hi
-                        cols[f"{c}__sum"] = s
-                cols["raw_bytes"] = raw
-                cols["encoded_bytes"] = enc
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([cols[f.name]], type=f.type)
-                     for f in out_schema],
-                    schema=out_schema,
-                )
+                        (cols[f"{c}__min"], cols[f"{c}__max"],
+                         cols[f"{c}__sum"]) = _int_stats(kinds[c], arr)
+                yield pa.RecordBatch.from_pylist(
+                    [{**cols, "raw_bytes": raw, "encoded_bytes": enc}], schema=out_schema)
 
-    encoded = df.mapInArrow(encode_fn, from_arrow_schema(out_schema))
-    data_dir = os.path.join(path, "data")
-    encoded.write.mode("overwrite").option(
-        "compression", conf.DATA_CODEC).parquet(data_dir)
-
-    chunks = spark.read.parquet(data_dir)
-    tot = chunks.agg(
-        F.count("*").alias("chunks"),
-        F.sum("n_rows").alias("rows"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("encoded_bytes").alias("enc"),
-    ).first()
-    meta = {
-        "schema": json.loads(df.schema.json()),
-        "columns": names,
-        "kinds": kinds,
-        "totals": {
-            "chunks": int(tot["chunks"] or 0),
-            "rows": int(tot["rows"] or 0),
-            "raw_bytes": int(tot["raw"] or 0),
-            "encoded_bytes": int(tot["enc"] or 0),
-        },
-    }
-    tmp = os.path.join(path, "_meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "_meta.json"))
-    return dict(meta["totals"])
+    # the previous table is retired only once the job has staged every
+    # chunk file, so a failed encode leaves it in place
+    tbl = Table(path)
+    run_id = uuid.uuid4().hex[:12]
+    rows = df.mapInArrow(
+        lambda batches: _write_chunks(tbl.staging_dir(run_id), encode_fn(batches), out_schema,
+                                     row_group_bytes=ROW_GROUP_BYTES),
+        from_arrow_schema(_staged_schema(out_schema))).collect()
+    tbl.retire_state(run_id, GENERIC_FORMAT)
+    tbl.promote_partitions(run_id, [r["file"] for r in rows])
+    os.makedirs(tbl.data_dir, exist_ok=True)  # an empty input promotes no file
+    totals = {"chunks": len(rows), "rows": sum(r["n_rows"] for r in rows),
+              **{k: sum(r[k] for r in rows) for k in ("raw_bytes", "encoded_bytes")}}
+    tbl.commit_snapshot({
+        "stage": "encoded", "run_id": run_id, "schema": GENERIC_FORMAT,
+        "spark_schema": df.schema.jsonValue(), "kinds": kinds,
+        "files": {"": sorted(os.listdir(tbl.data_dir))}, "totals": totals})
+    tbl.purge_retired()
+    return totals
 
 
 def read_meta(path: str) -> dict:
-    with open(os.path.join(path, "_meta.json")) as fh:
-        return json.load(fh)
+    """Schema, columns, kinds and totals of the committed generic table at
+    path; ValueError for an old _meta.json table or any other format."""
+    snap = Table(path).snapshot() or {}
+    if snap.get("schema") != GENERIC_FORMAT or snap.get("stage") != "encoded":
+        found = ("an old _meta.json table: re-encode it with encode_generic"
+                 if os.path.exists(os.path.join(path, "_meta.json")) else
+                 f"format {snap.get('schema')!r}, stage {snap.get('stage')!r}")
+        raise ValueError(f"{path} holds no committed {GENERIC_FORMAT} table ({found})")
+    return {"schema": snap["spark_schema"],
+            "columns": [f["name"] for f in snap["spark_schema"]["fields"]],
+            "kinds": snap["kinds"], "totals": snap["totals"]}
+
+
+def _open(spark: SparkSession, path: str) -> tuple[dict, DataFrame]:
+    """read_meta(path) and the table's chunk rows, read with the chunk
+    schema it implies, so a table of no chunk files reads as no rows."""
+    meta = read_meta(path)
+    return meta, spark.read.schema(from_arrow_schema(_chunk_schema(
+        meta["columns"], meta["kinds"]))).parquet(os.path.join(path, "data"))
 
 
 def decode_generic(spark: SparkSession, path: str,
@@ -279,7 +289,7 @@ def decode_generic(spark: SparkSession, path: str,
     {col: (lo, hi)} prunes chunks by the recorded int64 min/max stats at
     the scan, then applies the exact row filter post-decode (int-backed
     kinds only: ints, timestamps as epoch ticks, dates as days)."""
-    meta = read_meta(path)
+    meta, chunks = _open(spark, path)
     kinds = meta["kinds"]
     full_schema = T.StructType.fromJson(meta["schema"])
     want = list(columns) if columns is not None else list(meta["columns"])
@@ -298,7 +308,6 @@ def decode_generic(spark: SparkSession, path: str,
                 f"({kinds.get(c)})")
     need = sorted(set(want) | set(where), key=meta["columns"].index)
 
-    chunks = spark.read.parquet(os.path.join(path, "data"))
     proj = ["n_rows"] + [f"{c}__blob" for c in need]
     for c, (lo, hi) in where.items():
         # chunk skip: a chunk whose [min,max] window misses the range
@@ -359,14 +368,13 @@ def stats_rollup_generic(spark: SparkSession, path: str,
     schema. Returns one row: (n_rows, <c>_sum, <c>_min, <c>_max, ...)
     in the raw int64 stats domain (epoch micros for timestamps, days
     for dates)."""
-    meta = read_meta(path)
+    meta, chunks = _open(spark, path)
     kinds = meta["kinds"]
     for c in columns:
         if c not in kinds or not _KINDS[kinds[c]][0]:
             raise ValueError(
                 f"stats rollup only covers int-backed columns, got {c!r} "
                 f"({kinds.get(c)})")
-    chunks = spark.read.parquet(os.path.join(path, "data"))
     aggs = [F.sum("n_rows").alias("n_rows")]
     for c in columns:
         aggs += [
@@ -380,8 +388,7 @@ def stats_rollup_generic(spark: SparkSession, path: str,
 def codec_report(spark: SparkSession, path: str) -> DataFrame:
     """Per-(column, codec) chunk counts and encoded bytes — the generic
     analog of the corpus manifest's codec-selection view."""
-    meta = read_meta(path)
-    chunks = spark.read.parquet(os.path.join(path, "data"))
+    meta, chunks = _open(spark, path)
     stack = ", ".join(
         f"'{c}', {c}__codec, {c}__blob" for c in meta["columns"])
     n = len(meta["columns"])

@@ -23,18 +23,14 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from eggopress import lineage as lineagelib
-from eggopress.encode import _write_chunks
-from eggopress.schema import STAGED_SCHEMA
+from eggopress.encode import (_FILE_SCHEMA, _PART_COLS, _STAGED_SCHEMA, _table_state,
+                              _write_chunks)
 from eggopress.tablefmt import Table
 
 
 def partition_file_counts(tbl: Table) -> dict[str, int]:
     """partition_id -> number of chunk parquet files on disk."""
-    out: dict[str, int] = {}
-    for pid in tbl.partition_dirs():
-        d = os.path.join(tbl.data_dir, pid)
-        out[pid] = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-    return out
+    return {pid: len(fs) for pid, fs in tbl.partition_file_listing().items()}
 
 
 def table_report(spark: SparkSession, table_path: str) -> dict:
@@ -309,7 +305,7 @@ def compact_table(spark: SparkSession, table_path: str, *,
     """Rewrite every partition holding >= min_files chunk files into one
     file each. Untouched partitions keep their files byte-for-byte. Each
     rewritten partition gets a lineage row (stage='compact'); the snapshot
-    is re-committed with the same totals (compaction moves no rows)."""
+    is re-committed with the new file listing (compaction moves no rows)."""
     tbl = Table(table_path)
     snap = tbl.snapshot()
     if snap is None or snap.get("stage") != "encoded":
@@ -328,7 +324,8 @@ def compact_table(spark: SparkSession, table_path: str, *,
     chunks = spark.read.option("basePath", tbl.data_dir).parquet(*paths)
     staging = tbl.staging_dir(run_id)
     staged = chunks.repartition("source", "salt").mapInArrow(
-        lambda batches: _write_chunks(staging, batches), STAGED_SCHEMA).collect()
+        lambda batches: _write_chunks(staging, batches, _FILE_SCHEMA, _PART_COLS),
+        _STAGED_SCHEMA).collect()
     promoted = tbl.promote_partitions(  # replace semantics
         run_id, [r["file"] for r in staged])
     after = partition_file_counts(tbl)
@@ -348,12 +345,8 @@ def compact_table(spark: SparkSession, table_path: str, *,
             list(snap.get(runs_key) or []), snap.get(merged_key) or {})
         if merged is not None:
             snap[merged_key] = merged
-    snap["stage"] = "encoded"
-    snap["partitions"] = tbl.partition_dirs()
-    snap["files"] = tbl.partition_file_listing()
-    snap["manifest_files"] = tbl.manifest_file_listing()
-    snap["last_compaction"] = run_id
-    tbl.commit_snapshot(snap)
+    tbl.commit_snapshot({**snap, **_table_state(tbl), "stage": "encoded",
+                         "last_compaction": run_id})
     return {
         "run_id": run_id,
         "compacted_partitions": len(promoted),

@@ -10,8 +10,10 @@ from __future__ import annotations
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-# On-disk format tag of corpus tables, recorded in every snapshot.
+# On-disk format tags, recorded in every snapshot of a corpus table and of
+# a generic table (generic.py).
 CORPUS_FORMAT = "corpus_v1"
+GENERIC_FORMAT = "generic_v1"
 
 # The authoritative input shape: pre-tokenized training sequences.
 CORPUS_SCHEMA = T.StructType(
@@ -58,14 +60,6 @@ CHUNK_SCHEMA = T.StructType(
     ]
 )
 CHUNK_ARROW_SCHEMA = to_arrow_schema(CHUNK_SCHEMA)
-
-# What a write task returns per chunk in place of its blobs: the stats
-# columns and the staged file (relative to the staging dir) holding it.
-STAGED_SCHEMA = T.StructType(
-    [f for f in CHUNK_SCHEMA
-     if f.name not in ("source", "salt") and not f.name.endswith("_blob")]
-    + [T.StructField("file", T.StringType(), False)]
-)
 
 # Manifest: per column-chunk stats (FIXTURES.md §3).
 MANIFEST_SCHEMA = T.StructType(

@@ -8,7 +8,7 @@ the engine (SURVEY.md §7 design stance). The commit discipline mirrors
 eggo's staging-then-rename lifecycle (eggo/util.py:93-112,
 eggo/operations.py:79-85).
 
-Layout:
+Layout of a corpus table (CORPUS_FORMAT):
     <table>/metadata/v<N>.metadata.json   snapshot: schema, plan, partitions
     <table>/metadata/version-hint.txt     current version (atomic os.replace)
     <table>/data/source=<s>/salt=<k>/     encoded chunk parquet files
@@ -16,6 +16,7 @@ Layout:
         files, part-<task>-s<stage>-a<attempt>; only listed ones promote
     <table>/manifest/                     per-column-chunk stats parquet
     <table>/lineage/                      checkpoint rows parquet
+A generic table (GENERIC_FORMAT) keeps only metadata/ and data/*.parquet.
 """
 
 from __future__ import annotations
@@ -24,8 +25,6 @@ import json
 import os
 import shutil
 import time
-
-from eggopress.schema import CORPUS_FORMAT
 
 
 class CommitConflict(RuntimeError):
@@ -114,19 +113,19 @@ class Table:
         os.replace(hint_tmp, os.path.join(self.meta_dir, "version-hint.txt"))
         return v
 
-    def retire_state(self, run_id: str) -> str | None:
+    def retire_state(self, run_id: str, fmt: str) -> str | None:
         """Non-destructive fresh-encode prep: demote the snapshot FIRST
         (readers gating on stage='encoded' must never see a valid snapshot
         over dirs in flux), then move data/manifest/lineage ASIDE into a
         _retired_<run_id> dir instead of deleting them. If the new encode
         fails or is interrupted, the previous table contents are still on
         disk; purge_retired() deletes them only after the new 'encoded'
-        snapshot commits. Stale _staging_ dirs are dropped (they were never
-        promoted, so nothing of value lives there). Returns the retired
-        dir, or None when there was nothing to retire."""
+        snapshot commits. Other runs' stale _staging_ dirs are dropped (never
+        promoted, so nothing of value lives there). fmt is the table's
+        format tag. Returns the retired dir, or None if nothing was retired."""
         if self.snapshot() is not None:
             self.commit_snapshot({"stage": "retiring", "run_id": run_id,
-                                  "schema": CORPUS_FORMAT})
+                                  "schema": fmt})
         retired = os.path.join(self.path, f"_retired_{run_id}")
         moved = False
         for d in (self.data_dir, self.manifest_dir, self.lineage_dir,
@@ -137,7 +136,7 @@ class Table:
                 moved = True
         if os.path.isdir(self.path):
             for ent in os.listdir(self.path):
-                if ent.startswith("_staging_"):
+                if ent.startswith("_staging_") and ent != f"_staging_{run_id}":
                     shutil.rmtree(os.path.join(self.path, ent), ignore_errors=True)
         return retired if moved else None
 
@@ -157,7 +156,7 @@ class Table:
 
     def promote_partitions(self, run_id: str, files: list[str],
                            merge: bool = False) -> list[str]:
-        """Move the listed staged chunk files (source=<s>/salt=<k>/<name>,
+        """Move the listed staged chunk files ([<partition dir>/]<name>,
         relative to the staging dir) into data/; anything else in staging
         (files of failed or speculative task attempts) is deleted.
 

@@ -3,12 +3,16 @@ flat schemas, blob-level projection, min/max chunk skipping, and the
 dense-only/supported-type contracts."""
 
 import datetime
+import json
 import os
+import re
 
 import pytest
 from pyspark.sql import Row, functions as F
 
 from eggopress import generic
+from eggopress.schema import CORPUS_FORMAT
+from eggopress.tablefmt import Table
 
 LI = "/root/testdata/sf0.001/lineitem.parquet"
 
@@ -194,6 +198,49 @@ def test_nulls_and_unsupported_types_rejected(spark, tmp_path):
             spark,
             spark.createDataFrame([Row(m={"k": 1})]),
             str(tmp_path / "u"))
+
+
+def test_failed_reencode_keeps_previous_table(spark, tmp_path):
+    """A re-encode whose encode job fails (a null in the last order's
+    return flag) leaves the previous table committed and decoding exactly:
+    its files are retired only after the new ones are staged."""
+    li = spark.read.parquet(LI)
+    path = str(tmp_path / "crash")
+    first = generic.encode_generic(spark, li, path)
+    last = li.agg(F.max("l_orderkey")).first()[0]
+    bad = li.withColumn("l_returnflag", F.when(F.col("l_orderkey") == last, F.lit(None))
+                        .otherwise(F.col("l_returnflag")))
+    with pytest.raises(Exception, match="dense-only"):
+        generic.encode_generic(spark, bad, path)
+    assert generic.read_meta(path)["totals"] == first
+    dec = generic.decode_generic(spark, path)
+    assert dec.schema == li.schema
+    pack = lambda x: x.select(F.struct(*li.columns).alias("r"))
+    assert pack(li).exceptAll(pack(dec)).count() == 0
+    assert pack(dec).exceptAll(pack(li)).count() == 0
+
+
+def test_read_meta_refuses_old_and_foreign_tables(tmp_path):
+    """A table in the old _meta.json format and a table of another format
+    are refused by name, never read as a generic table."""
+    old = tmp_path / "old"
+    (old / "data").mkdir(parents=True)
+    (old / "_meta.json").write_text(json.dumps(
+        {"schema": {}, "columns": [], "kinds": {}, "totals": {}}))
+    with pytest.raises(ValueError, match=re.escape(str(old)) + ".*re-encode"):
+        generic.read_meta(str(old))
+    corpus = tmp_path / "corpus"
+    Table(str(corpus)).commit_snapshot({"stage": "encoded", "schema": CORPUS_FORMAT})
+    with pytest.raises(ValueError, match=re.escape(str(corpus)) + ".*corpus_v1"):
+        generic.read_meta(str(corpus))
+
+
+def test_empty_dataframe_roundtrip(spark, tmp_path):
+    df = spark.createDataFrame([], "x long, y string")
+    path = str(tmp_path / "empty")
+    assert generic.encode_generic(spark, df, path)["rows"] == 0
+    dec = generic.decode_generic(spark, path)
+    assert dec.schema == df.schema and dec.count() == 0
 
 
 def test_cli_generic_encode_decode(spark, tmp_path, capsys):

@@ -1,15 +1,20 @@
-"""The one corpus write path: encode_table, encode_append and ingest_table
-share the partition plan, the staged write and its failure recording."""
+"""The one write path: encode_table, encode_append and ingest_table share
+the partition plan, the staged write and its failure recording, and every
+table write, generic tables included, stores its chunks through the same
+task-side chunk writer."""
 
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from eggopress import decode, encode, ingest, lineage, maintenance, synth, verify
+from eggopress import (decode, encode, generic, ingest, lineage, maintenance,
+                       synth, verify)
 from eggopress.pipeline import textstats
 from eggopress.schema import LINEAGE_SCHEMA, MANIFEST_SCHEMA
 from eggopress.tablefmt import Table
@@ -185,6 +190,85 @@ def test_resume_under_same_run_id_keeps_every_manifest(spark, tmp_path):
     assert checks["manifest_chunks_without_data"] == 0
     assert checks["data_chunks_without_manifest"] == 0
     assert len(Table(path).manifest_file_listing()) == len(pids)
+
+
+def test_resume_commits_whole_table_totals(spark, tmp_path):
+    """A resume stages only the missing partitions, but its snapshot totals
+    cover the whole table, so table_report calls the resumed table
+    healthy; the returned summary still counts this run only."""
+    corpus = synth.corpus_df(spark, 600, seed=6)
+    path = str(tmp_path / "resume_totals_tbl")
+    counts = {r["source"]: r["count"] for r in corpus.groupBy("source").count().collect()}
+    pids = encode.partition_ids(encode.plan_salts(counts, 4))
+    with pytest.raises(Exception, match="injected failure"):
+        encode.encode_table(spark, corpus, path, n_partitions=4, waves=len(pids),
+                            fail_partitions=frozenset([pids[-1]]))
+    resumed = encode.encode_table(spark, corpus, path, resume=True)
+    assert resumed["partitions"] == 1 and 0 < resumed["rows"] < 600
+    totals = Table(path).snapshot()["totals"]
+    assert totals["rows"] == 600
+    report = maintenance.table_report(spark, path)
+    assert report["checks"]["snapshot_rows_match_data"] is True
+    assert report["healthy"] is True
+    assert {k: report[k] for k in totals} == totals
+
+
+def test_row_groups_close_at_row_group_bytes(tmp_path, monkeypatch):
+    """The corpus writers keep one row group per chunk whatever its size;
+    with generic.ROW_GROUP_BYTES a file closes a row group once its
+    buffered chunk rows reach it, so ~115 KB generic chunks share one."""
+    class _Task:
+        partitionId = stageId = attemptNumber = staticmethod(lambda: 0)
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(_Task))
+    schema = pa.schema([pa.field("n", pa.int64(), False),
+                        pa.field("x_blob", pa.binary(), False)])
+    for name, size, n, rg_bytes, groups in (
+            ("corpus_small", 115_000, 4, 0, [1, 1, 1, 1]),
+            ("generic_big", 1_300_000, 3, generic.ROW_GROUP_BYTES, [1, 1, 1]),
+            ("generic", 115_000, 25, generic.ROW_GROUP_BYTES, [10, 10, 5])):
+        chunks = [pa.RecordBatch.from_arrays(
+            [pa.array([i]), pa.array([b"\0" * size])], schema=schema)
+            for i in range(n)]
+        staged = list(encode._write_chunks(str(tmp_path / name), iter(chunks), schema,
+                                           row_group_bytes=rg_bytes))
+        assert [b.num_rows for b in staged] == [1] * n
+        assert {b["file"][0].as_py() for b in staged} == {"part-00000-s0-a0.parquet"}
+        meta = pq.ParquetFile(tmp_path / name / "part-00000-s0-a0.parquet").metadata
+        assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] == groups
+
+
+def test_compacted_corpus_files_keep_one_row_group_per_chunk(spark, tmp_path):
+    """Small appended chunks stay one row group each, through the append
+    and through compaction, so footer min/max still prune per chunk."""
+    table = str(tmp_path / "rg_tbl")
+    for i in range(2):
+        encode.encode_append(spark, synth.corpus_df(spark, 300, seed=40 + i), table,
+                             run_id=f"rg-{i}")
+    assert maintenance.compact_table(spark, table)["compacted_partitions"] > 0
+    files = [os.path.join(r, f) for r, _, fs in os.walk(Table(table).data_dir)
+             for f in fs if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        assert meta.num_row_groups == meta.num_rows
+
+
+def test_generic_chunk_files_no_larger_than_spark_writer(spark, tmp_path):
+    """The generic chunk rows the task-side writer stores take no more
+    bytes than the same rows written file for file by Spark's zstd
+    parquet writer."""
+    path = str(tmp_path / "generic_bytes_tbl")
+    generic.encode_generic(
+        spark, spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"),
+        path, n_partitions=2, chunk_rows=1000)
+    data_dir = Table(path).data_dir
+    files = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    assert len(files) == 2
+    for f in files:
+        (spark.read.parquet(os.path.join(data_dir, f)).coalesce(1).write
+         .option("compression", "zstd").parquet(str(tmp_path / "spark_written" / f)))
+    assert _parquet_bytes(data_dir) <= _parquet_bytes(str(tmp_path / "spark_written"))
 
 
 def test_chunk_files_no_larger_than_spark_writer(spark, tmp_path):
