@@ -167,15 +167,25 @@ def _int_stats(kind: str, arr: pa.Array) -> tuple[int, int, int]:
 def _from_int64(ints: np.ndarray, field: pa.Field) -> pa.Array:
     """Decoded int64 stream -> typed column array (scalar kinds): the
     stream, narrowed to the field's width, is the column's values
-    buffer (ints, IEEE bits, date days and epoch ticks alike)."""
-    vals = np.ascontiguousarray(ints, dtype=f"<i{field.type.bit_width // 8}")
+    buffer (ints, IEEE bits, date days and epoch ticks alike). A stream
+    that does not fit a narrower field raises ValueError naming the
+    field instead of wrapping."""
+    width = field.type.bit_width
+    if width < 64 and len(ints):
+        lo, hi = int(ints.min()), int(ints.max())
+        if lo < -(1 << (width - 1)) or hi >= 1 << (width - 1):
+            raise ValueError(
+                f"decoded values of column {field.name!r} span "
+                f"[{lo}, {hi}], outside its {width}-bit type {field.type}")
+    vals = np.ascontiguousarray(ints, dtype=f"<i{width // 8}")
     return pa.Array.from_buffers(field.type, len(vals),
                                  [None, pa.py_buffer(vals)])
 
 
 def _list_from_parts(lengths: np.ndarray, val_blob: bytes,
                      field: pa.Field) -> pa.Array:
-    values = _from_int64(codecs.decode_ints(val_blob), field.type.value_field)
+    values = _from_int64(codecs.decode_ints(val_blob),
+                         field.type.value_field.with_name(field.name))
     offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     return pa.ListArray.from_arrays(

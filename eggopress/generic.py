@@ -52,7 +52,7 @@ from eggopress.chunk import (
     _int_stats,
 )
 from eggopress.codecs import core as codecs
-from eggopress.encode import _staged_schema, _write_chunks
+from eggopress.encode import _phase_clock, _staged_schema, _write_chunks
 from eggopress.schema import GENERIC_FORMAT
 from eggopress.tablefmt import Table
 
@@ -158,50 +158,58 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
     chunk pruning), at a small ratio cost vs a perfect single-column
     sort. Without cluster_by the encode is a NARROW pass over the input
     partitioning: zero shuffles, the plan you want when the upstream
-    layout is already good."""
+    layout is already good.
+
+    Returns the snapshot's totals (chunks, rows, raw_bytes,
+    encoded_bytes) plus phase_sec (plan: count, zorder stats and
+    sizing; encode_write: the encode job; commit) and tasks, the
+    planned encode task count (None on the narrow pass, which keeps the
+    input's partitioning)."""
     from eggopress import conf
 
     names = list(df.columns)
     kinds = {f.name: _colkind(f.dataType) for f in df.schema.fields}
     out_schema = _chunk_schema(names, kinds)
     rows_per_chunk = chunk_rows or conf.CHUNK_ROWS
+    phases, mark = _phase_clock()
 
     if cluster_mode not in ("range", "zorder"):
         raise ValueError(f"unknown cluster_mode: {cluster_mode!r}")
+    tasks = n_partitions
     if cluster_by:
         missing = [c for c in cluster_by if c not in names]
         if missing:
             raise ValueError(f"cluster_by columns not in schema: {missing}")
-        n = n_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        # scale-adaptive parallelism (optimization guide §2): n_partitions
-        # is the caller's layout FLOOR, but the Python codec work is
-        # ~0.1 core-seconds per 8k-row chunk, so a constant partition
-        # count starves the cluster the moment the input outgrows it
-        # (measured: 6M lineitem rows on 8 partitions left 24 of 32 cores
-        # idle for the whole encode stage). Fan out to ~4 chunks of work
-        # per task, capped at 4x the cluster's parallelism; chunk size is
-        # unchanged (ratio holds), file count grows with data size —
-        # which is the layout you want anyway (a constant file count
-        # means unbounded file sizes at scale). Small inputs keep exactly
-        # the caller's n (the pre-count is metadata-fast on parquet).
-        total_rows = df.count()
-        n = max(n, min(
-            -(-total_rows // (8 * rows_per_chunk)),
-            2 * spark.sparkContext.defaultParallelism,
-        ))
+        # Size the encode stage by chunk volume; n_partitions is the
+        # caller's layout floor. Every Python task of a mapInArrow stage
+        # pays ~0.2 s before its function runs (at local[2] on a 4-CPU
+        # host a no-op mapInArrow over 1,000 rows took 0.36 / 0.55 / 1.03
+        # / 1.83 s at 2 / 4 / 8 / 16 tasks, the same stages without Python
+        # 0.07-0.09 s). Tasks up to the cluster's parallelism pay it side
+        # by side, so one wave of whole chunks fills every slot; past
+        # that, one task per 8 chunks, capped at 2x the parallelism. A
+        # constant floor such as the shuffle partition count cut 80k
+        # lineitem rows into 8 tasks of two short chunks each, 4 waves on
+        # 2 slots; a constant count starves a big input instead (6M
+        # lineitem rows on 8 partitions left 24 of 32 cores idle). Chunks
+        # stay full chunk_rows slices; the file count grows with the data.
+        n_chunks = -(-df.count() // rows_per_chunk)
+        slots = spark.sparkContext.defaultParallelism
+        tasks = max(n_partitions or 1,
+                    min(n_chunks, max(slots, -(-n_chunks // 8)), 2 * slots))
         if cluster_mode == "zorder":
             df = (
                 df.withColumn("_z", _zorder_expr(df, list(cluster_by), kinds))
-                .repartitionByRange(n, "_z")
+                .repartitionByRange(tasks, "_z")
                 .sortWithinPartitions("_z")
                 .drop("_z")
             )
         else:
-            df = df.repartitionByRange(n, *cluster_by) \
+            df = df.repartitionByRange(tasks, *cluster_by) \
                    .sortWithinPartitions(*cluster_by)
     elif n_partitions:
         df = df.repartition(n_partitions)
+    mark("plan")
 
     def encode_fn(batches):
         from pyspark import TaskContext
@@ -244,6 +252,7 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
         lambda batches: _write_chunks(tbl.staging_dir(run_id), encode_fn(batches), out_schema,
                                      row_group_bytes=ROW_GROUP_BYTES),
         from_arrow_schema(_staged_schema(out_schema))).collect()
+    mark("encode_write")
     tbl.retire_state(run_id, GENERIC_FORMAT)
     tbl.promote_partitions(run_id, [r["file"] for r in rows])
     os.makedirs(tbl.data_dir, exist_ok=True)  # an empty input promotes no file
@@ -254,7 +263,8 @@ def encode_generic(spark: SparkSession, df: DataFrame, path: str, *,
         "spark_schema": df.schema.jsonValue(), "kinds": kinds,
         "files": {"": sorted(os.listdir(tbl.data_dir))}, "totals": totals})
     tbl.purge_retired()
-    return totals
+    mark("commit")
+    return {**totals, "phase_sec": phases, "tasks": tasks}
 
 
 def read_meta(path: str) -> dict:

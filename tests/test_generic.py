@@ -212,7 +212,8 @@ def test_failed_reencode_keeps_previous_table(spark, tmp_path):
                         .otherwise(F.col("l_returnflag")))
     with pytest.raises(Exception, match="dense-only"):
         generic.encode_generic(spark, bad, path)
-    assert generic.read_meta(path)["totals"] == first
+    assert generic.read_meta(path)["totals"] == {
+        k: v for k, v in first.items() if k not in ("phase_sec", "tasks")}
     dec = generic.decode_generic(spark, path)
     assert dec.schema == li.schema
     pack = lambda x: x.select(F.struct(*li.columns).alias("r"))
@@ -241,6 +242,64 @@ def test_empty_dataframe_roundtrip(spark, tmp_path):
     assert generic.encode_generic(spark, df, path)["rows"] == 0
     dec = generic.decode_generic(spark, path)
     assert dec.schema == df.schema and dec.count() == 0
+
+
+def _encode_stage_tasks(spark, path, group, **kw):
+    """(summary, encode-stage task count, data files) of one
+    encode_generic of the LI fixture. The encode stage is the last stage
+    the encode's jobs ran (the mapInArrow's collect), found through
+    statusTracker() by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one encode_generic")
+    try:
+        summary = generic.encode_generic(spark, spark.read.parquet(LI), path, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    files = [f for f in os.listdir(Table(path).data_dir) if f.endswith(".parquet")]
+    return summary, tracker.getStageInfo(max(stages)).numTasks, len(files)
+
+
+SUMMARY_TOTALS = ["chunks", "encoded_bytes", "raw_bytes", "rows"]
+PHASES = ["commit", "encode_write", "plan"]
+
+
+def test_cluster_encode_sized_by_chunk_volume(spark, tmp_path):
+    """With no n_partitions a cluster_by encode runs one wave of whole
+    chunks (up to the parallelism), then one task per 8 chunks, capped
+    at 2x the parallelism; not one task per shuffle partition. The
+    6,000-row fixture is one chunk: one task and one file in both
+    cluster modes. At 1,000-row chunks it is 6 chunks, which fill the
+    4 slots. n_partitions stays the caller's floor. The summary carries
+    the snapshot's totals plus phase_sec and the planned task count;
+    the snapshot keeps the totals only."""
+    li_key = ("l_shipdate", "l_orderkey")
+    cases = ((li_key, "range", {}, 1),
+             (("l_partkey", "l_suppkey"), "zorder", {}, 1),
+             (li_key, "range", {"chunk_rows": 1000}, 4),
+             (li_key, "range", {"n_partitions": 4}, 4))
+    for i, (key, mode, kw, want) in enumerate(cases):
+        path = str(tmp_path / f"case{i}")
+        summary, tasks, files = _encode_stage_tasks(
+            spark, path, f"sizing-{i}", cluster_by=key, cluster_mode=mode, **kw)
+        assert (tasks, files) == (want, want), (mode, kw)
+        assert summary["rows"] == 6000 and summary["tasks"] == want
+        assert sorted(summary) == sorted(SUMMARY_TOTALS + ["phase_sec", "tasks"])
+        assert sorted(summary["phase_sec"]) == PHASES
+        assert all(v >= 0 for v in summary["phase_sec"].values())
+        assert generic.read_meta(path)["totals"] == {
+            k: summary[k] for k in SUMMARY_TOTALS}
+
+
+def test_narrow_encode_summary(spark, tmp_path):
+    """The narrow pass keeps the input's partitioning: no planned task
+    count, the same phase breakdown."""
+    narrow = generic.encode_generic(spark, spark.read.parquet(LI),
+                                    str(tmp_path / "narrow"))
+    assert narrow["tasks"] is None and sorted(narrow["phase_sec"]) == PHASES
 
 
 def test_cli_generic_encode_decode(spark, tmp_path, capsys):
